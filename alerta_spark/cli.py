@@ -18,18 +18,6 @@ Config keys (YAML, flat):
     shuffle_partitions:int                                (default cpu count)
     stream_checkpoint: checkpoint dir (streaming mode)
     trigger:           {"processingTime": "15 minutes"} etc. (streaming mode)
-    fuse_deadmen:      bool (default false) — one-scan fused absence pass
-    fuse_thresholds:   bool (default false) — run every threshold rule
-                       in ONE corpus scan (operators/threshold.
-                       threshold_alerts_fused); identical alerts,
-                       N-times fewer scans
-    fuse_sequences:    bool (default false) — one-scan fused sequence
-                       starts AND one-scan fused in-flight resume
-                       across rules, with state kept executor-side
-                       (operators/sequence_frames.starts_fused_frames
-                       / resume_fused_frames); identical documents,
-                       N-times fewer scans, driver RSS flat in
-                       in-flight cardinality
 """
 
 from __future__ import annotations
@@ -66,18 +54,9 @@ def run_from_config(config: dict[str, Any], stream: bool = False):
     rules = load_rules(str(config.get("alerts_file_mask", "alerts/*.yml")))
     engine = Engine(spark, str(config["store_dir"]))
     table = str(config.get("events_table", "events"))
-    fuse = bool(config.get("fuse_thresholds", False))
-    fuse_dm = bool(config.get("fuse_deadmen", False))
-    fuse_seq = bool(config.get("fuse_sequences", False))
     if not stream:
         events = load_table(spark, str(config["lake_dir"]), table)
-        engine.run_once(
-            events,
-            rules,
-            fuse_thresholds=fuse,
-            fuse_deadmen=fuse_dm,
-            fuse_sequences=fuse_seq,
-        )
+        engine.run_once(events, rules)
         return None
     if "stream_checkpoint" not in config:
         # validated HERE (not load_config) because the key is only
@@ -96,9 +75,6 @@ def run_from_config(config: dict[str, Any], stream: bool = False):
         rules,
         str(config["stream_checkpoint"]),
         trigger=config.get("trigger"),
-        fuse_thresholds=fuse,
-        fuse_deadmen=fuse_dm,
-        fuse_sequences=fuse_seq,
     )
 
 

@@ -14,6 +14,7 @@ trigger.
 from __future__ import annotations
 
 import os
+from datetime import timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,7 +23,16 @@ from pyspark.sql import functions as F
 from alerta_spark.ckpt import ReliableCheckpointMisconfigured, checkpoint
 from alerta_spark.ckpt import validate as ckpt_validate
 from alerta_spark.operators.deadman import deadman_alerts
-from alerta_spark.operators.sequence import process_sequence_alert
+from alerta_spark.operators.sequence import (
+    process_sequence_alert,
+    process_sequence_slot_batched,
+)
+from alerta_spark.operators.sequence_frames import (
+    finalize_sequences_frames,
+    live_refs_frame,
+    resume_fused_frames,
+    starts_fused_frames,
+)
 from alerta_spark.operators.threshold import threshold_alerts
 from alerta_spark.rules import parse_timedelta
 from alerta_spark.state import DocStore, SlotEventStore
@@ -74,36 +84,31 @@ class Engine:
         self,
         events_df: DataFrame,
         rules: list[dict[str, Any]],
-        fuse_thresholds: bool = False,
-        fuse_deadmen: bool = False,
-        fuse_sequences: bool = False,
         eval_time=None,
     ) -> None:
         """One engine pass (the cron body, alerta.py:481-515).
 
-        ``fuse_thresholds=True`` routes every threshold rule through
-        :func:`~alerta_spark.operators.threshold.threshold_alerts_fused`
-        — one corpus scan + one exchange for the whole rule set instead
-        of a scan per rule (the reference loop's shape). Alert documents
-        are identical to the sequential path (pytest-pinned); only
-        their append order in the store differs (all thresholds first).
-        ``fuse_sequences=True`` applies the same one-scan treatment to
-        sequence rules on BOTH phases of the pass via the FRAME-NATIVE
-        tier (operators/sequence_frames.py): the in-flight resume
-        (`resume_fused_frames` — all fusable (rule, slot) groups share
-        one conditional-aggregate scan with a broadcast value-probe)
-        and the fresh starts (`starts_fused_frames`), with state kept
-        executor-side end to end and the intra-pass dedup interaction
-        replayed as chained id-frame anti-joins; deadman (absence)
-        resume slots fuse through the frame tier's deadman face
-        (round 9); the remaining unfusable shapes (multi-templated
-        criteria, key mismatch) fall back to the faithful
-        per-group/per-document paths, with a warning past 1000
-        fallback documents.
-        Per-rule failure isolation is preserved by validating each
-        rule's criteria/key resolution up front and dropping (logging)
-        the broken ones, matching the swallow-and-continue semantics
-        below."""
+        Threshold and deadman rules run one scan each, in rule order
+        (the reference loop's shape): every rule's scan is isolated, so
+        a runtime scan failure is swallowed for that rule alone — a
+        threshold rule fires nothing, a deadman rule fires (absence of
+        evidence is the alarm, alerta.py:417-420).
+        Sequence rules run on the frame-native tier
+        (operators/sequence_frames.py) on both phases of the pass: the
+        in-flight resume (`resume_fused_frames`) and the fresh starts
+        (`starts_fused_frames`) each share one conditional-aggregate
+        scan across rules, with state kept executor-side end to end
+        and the intra-pass dedup interaction replayed as chained
+        id-frame anti-joins. The shapes that tier cannot fuse
+        (non-equality templates, key mismatch, criteria that fail to
+        parse, deadman or templated slot-0 criteria) fall back to the
+        faithful batched/per-document paths.
+
+        ``eval_time`` (default: now) is the pass's one evaluation
+        instant: suppression windows, the F8 history bound, the start
+        stamp (hence expiration) of new sequences and the expiry check
+        all read it, so a replay at a past or future instant behaves
+        as a pass run then."""
         # reliable-checkpoint misconfiguration must abort the PASS, not
         # drown in the per-rule scan swallows (where it would persist
         # zero alerts per tick, or read as a deadman's absence-of-
@@ -114,6 +119,8 @@ class Engine:
         # ONE evaluation instant per pass: the dedup-history bound and
         # the suppression checks below must agree on "now"
         now = eval_time or utcnow()
+        if now.tzinfo is None:
+            now = now.replace(tzinfo=timezone.utc)
         # arm this pass's F8 history bound BEFORE any dedup probe runs
         # (the resume below probes too); inflight is never bounded —
         # active sequence captures must dedup regardless of age
@@ -121,7 +128,7 @@ class Engine:
             self.alerts.dedup_min_epoch = (
                 int(now.timestamp()) - self._dedup_history_s
             )
-        self._resume_inflight(events_df, fused=fuse_sequences)
+        self._resume_inflight(events_df)
         # maintenance windows: a rule whose `suppress` interval covers
         # this evaluation instant is skipped whole — including deadman
         # rules (a maintenance window is precisely when absence is
@@ -154,48 +161,33 @@ class Engine:
                 "suppressed rules this run: %s",
                 [r.get("alert_name") for r in suppressed],
             )
-        rules = active
-
-        if fuse_thresholds:
-            thr = [
-                r for r in rules if r.get("alert_type", "threshold") == "threshold"
-            ]
-            if thr:
-                self._run_thresholds_fused(events_df, thr)
-            rules = [
-                r for r in rules if r.get("alert_type", "threshold") != "threshold"
-            ]
-        if fuse_deadmen:
-            dm = [r for r in rules if r.get("alert_type") == "deadman"]
-            if dm:
-                self._run_deadmen_fused(events_df, dm)
-            rules = [r for r in rules if r.get("alert_type") != "deadman"]
-        if fuse_sequences:
-            seq = [r for r in rules if r.get("alert_type") == "sequence"]
-            if seq:
-                from alerta_spark.operators.sequence_frames import (
-                    starts_fused_frames,
-                )
-
-                # one conditional-aggregate scan starts every fusable
-                # sequence rule, with fired-group documents assembled
-                # and appended EXECUTOR-side (frame-native tier) —
-                # unfusable ones (deadman slots, templated slot-0
-                # criteria, broken criteria) fall through to the
-                # faithful per-rule loop below
-                leftover = starts_fused_frames(
+        # new sequences start at this pass's instant (their expiration
+        # is start + lifespan), not at the wall clock of the call
+        rules = [
+            dict(r, utctimestamp=now.isoformat())
+            if r.get("alert_type") == "sequence" and "utctimestamp" not in r
+            else r
+            for r in active
+        ]
+        seq = [r for r in rules if r.get("alert_type") == "sequence"]
+        if seq:
+            # one conditional-aggregate scan starts every fusable
+            # sequence rule, with fired-group documents assembled and
+            # appended EXECUTOR-side — unfusable ones (deadman slots,
+            # templated slot-0 criteria, broken criteria) fall through
+            # to the faithful per-rule loop below
+            leftover = {
+                id(r)
+                for r in starts_fused_frames(
                     events_df, seq, self.inflight, self.alerts,
                     self.id_col, self.ts_col, spill_store=self.slot_events,
                 )
-                fused_names = {id(r) for r in seq} - {
-                    id(r) for r in leftover
-                }
-                rules = [
-                    r
-                    for r in rules
-                    if r.get("alert_type") != "sequence"
-                    or id(r) not in fused_names
-                ]
+            }
+            rules = [
+                r
+                for r in rules
+                if r.get("alert_type") != "sequence" or id(r) in leftover
+            ]
 
         for rule in rules:
             kind = rule.get("alert_type", "threshold")
@@ -287,14 +279,9 @@ class Engine:
         # Frame-native: completion flags, emission, and the kept-rows
         # overwrite all run executor-side — no pass ever collects the
         # in-flight table to the driver.
-        from alerta_spark.operators.sequence_frames import (
-            finalize_sequences_frames,
-            live_refs_frame,
-        )
-
         finalize_sequences_frames(
             self.inflight, self.alerts, spill_store=self.slot_events,
-            prune=False,
+            now=now, prune=False,
         )
         self._passes_since_compact += 1
         if self.compact_every and self._passes_since_compact >= self.compact_every:
@@ -308,9 +295,6 @@ class Engine:
         rules: list[dict[str, Any]],
         checkpoint_dir: str,
         trigger: dict[str, Any] | None = None,
-        fuse_thresholds: bool = False,
-        fuse_deadmen: bool = False,
-        fuse_sequences: bool = False,
     ):
         """T1 as a first-class API: the cron body under a Structured
         Streaming trigger. Each micro-batch executes one full rule pass
@@ -327,13 +311,7 @@ class Engine:
         trigger = trigger or {"availableNow": True}
 
         def _batch(batch_df: DataFrame, _batch_id: int) -> None:
-            self.run_once(
-                batch_df,
-                rules,
-                fuse_thresholds=fuse_thresholds,
-                fuse_deadmen=fuse_deadmen,
-                fuse_sequences=fuse_sequences,
-            )
+            self.run_once(batch_df, rules)
 
         return (
             events_stream.writeStream.foreachBatch(_batch)
@@ -342,211 +320,21 @@ class Engine:
             .start()
         )
 
-    def _run_thresholds_fused(
-        self, events_df: DataFrame, rules: list[dict[str, Any]]
-    ) -> None:
-        """Fused threshold pass: validate each rule compiles/resolves
-        (broken ones log and drop — reference swallow semantics,
-        alerta.py:470-473), anti-join alert history ONCE, run the
-        single-scan aggregate, then render each rule's slice of the
-        tiny fired frame.
-
-        Intra-pass F8 replay (sequential-loop semantics): in the
-        sequential path, rule k's history probe sees the alerts rules
-        1..k-1 wrote THIS pass, so overlapping captures fire only
-        once. The fused pass replays that over the persisted fired
-        frame — each rule's post-filter slice contributes its event
-        ids to a captured-ids FRAME (never collected: emission is
-        distributed, and the id set is bounded by fired-groups x
-        event cap, i.e. unbounded in corpus size) that anti-joins the
-        next rule's slice. Slices are localCheckpointed so the chain
-        stays O(1) plan depth per rule. One documented divergence,
-        same as the fused sequence pass: a group that hit the
-        collection cap AND overlaps an earlier rule's capture keeps
-        the scan-time count (the uncollected tail is not
-        re-checkable without a second scan). Equivalence with the
-        sequential loop — including overlapping rules — is
-        pytest-pinned (tests/test_engine_rules.py)."""
-        import logging
-
-        from alerta_spark.dialect import trino_to_spark
-        from alerta_spark.operators.dedup import (
-            alerted_event_ids,
-            remove_previously_alerted,
-        )
-        from alerta_spark.operators.sequence import _filter_slice_events_frame
-        from alerta_spark.operators.threshold import (
-            assemble_alerts,
-            threshold_alerts_fused,
-        )
-        from alerta_spark.paths import path_col
-        from alerta_spark.rules import threshold_shell
-
-        valid: list[dict[str, Any]] = []
-        for rule in rules:
-            try:
-                p = threshold_shell(rule)
-                if p["criteria"]:
-                    # plan-time parse + resolve check; no job runs
-                    events_df.where(F.expr(trino_to_spark(p["criteria"]))).schema
-                path_col(events_df, p["aggregation_key"])
-                valid.append(rule)
-            except Exception:
-                logging.getLogger(__name__).exception(
-                    "threshold scan failed for rule %r", rule.get("alert_name")
-                )
-        if not valid:
-            return
-        ev = remove_previously_alerted(
-            events_df, self.alerts.alerted_ids(), id_col=self.id_col
-        )
-        fired = threshold_alerts_fused(
-            ev, valid, id_col=self.id_col, ts_col=self.ts_col
-        ).persist()
-        try:
-            # per-rule document assembly off the persisted (tiny,
-            # post-aggregation) fired frame, ONE store append for the
-            # whole pass: each rule's slice is checkpointed anyway for
-            # the F8 replay chain, so the union below is a cheap read
-            # of already-materialized blocks — N rules used to cost N
-            # parquet commit rounds
-            captured = None  # DataFrame[alerted_event_id], this pass
-            doc_frames = []
-            for i, rule in enumerate(valid):
-                p = threshold_shell(rule)
-                # slice on rule_idx, not alert_name: two rules sharing
-                # a name (both defaulting to 'unnamed') would otherwise
-                # emit each group once PER rule with the wrong params
-                slice_ = fired.where(
-                    F.col("rule_idx") == i
-                ).select("value", "count", "events")
-                if captured is not None:
-                    slice_ = _filter_slice_events_frame(
-                        slice_, captured, int(p["threshold"]), self.id_col
-                    )
-                if len(valid) > 1:
-                    # materialize the tiny slice once: the emission
-                    # union AND every later rule's anti-join read the
-                    # checkpointed blocks, so the replay chain never
-                    # recomputes upstream slices or deepens lineage
-                    slice_ = checkpoint(slice_, eager=True)
-                doc_frames.append(assemble_alerts(slice_, p, ev.schema))
-                if len(valid) > 1:
-                    ids_k = alerted_event_ids(slice_, id_field=self.id_col)
-                    captured = (
-                        ids_k
-                        if captured is None
-                        else captured.unionByName(ids_k)
-                    )
-            out = doc_frames[0]
-            for fdf in doc_frames[1:]:
-                out = out.unionByName(fdf)
-            self.alerts.append_frame(out, id_field=self.id_col)
-        finally:
-            fired.unpersist()
-
-    def _run_deadmen_fused(
-        self, events_df: DataFrame, rules: list[dict[str, Any]]
-    ) -> None:
-        """Fused deadman pass: rules whose criteria fail to COMPILE
-        fire immediately (deadman failure semantics, alerta.py:417-420
-        — absence of evidence is the alarm), the rest share one
-        single-scan aggregate with per-rule empty synthesis; each
-        rule's slice renders through the same assemble_alerts as the
-        sequential path."""
-        from alerta_spark.dialect import trino_to_spark
-        from alerta_spark.operators.deadman import deadman_alerts_fused
-        from alerta_spark.operators.threshold import assemble_alerts
-        from alerta_spark.paths import path_col
-        from alerta_spark.rules import deadman_shell
-
-        valid: list[dict[str, Any]] = []
-        for rule in rules:
-            try:
-                p = deadman_shell(rule)
-                if p["criteria"]:
-                    events_df.where(F.expr(trino_to_spark(p["criteria"]))).schema
-                path_col(events_df, p["aggregation_key"])
-                valid.append(rule)
-            except Exception:
-                # broken criteria FIRES the deadman, as sequential
-                empty = events_df.where(F.lit(False))
-                fired = deadman_alerts(
-                    empty, dict(rule, criteria=""), id_col=self.id_col,
-                    ts_col=self.ts_col,
-                )
-                self.alerts.append_frame(fired, id_field=self.id_col)
-        if not valid:
-            return
-        fired_all = deadman_alerts_fused(
-            events_df, valid, id_col=self.id_col, ts_col=self.ts_col
-        ).persist()
-        try:
-            # ONE store append for every rule's slice (no F8 chain on
-            # the deadman path, so the union is over the persisted
-            # fired frame directly)
-            doc_frames = []
-            for i, rule in enumerate(valid):
-                p = deadman_shell(rule)
-                # slice on rule_idx, not alert_name: two rules sharing
-                # a name (both defaulting to 'unnamed') would otherwise
-                # cross-contaminate each other's slices
-                slice_ = fired_all.where(
-                    F.col("rule_idx") == i
-                ).select("value", "count", "events")
-                doc_frames.append(
-                    assemble_alerts(slice_, p, events_df.schema)
-                )
-            out = doc_frames[0]
-            for fdf in doc_frames[1:]:
-                out = out.unionByName(fdf)
-            self.alerts.append_frame(out, id_field=self.id_col)
-        finally:
-            fired_all.unpersist()
-
-    def _resume_inflight(self, events_df: DataFrame, fused: bool = False) -> None:
+    def _resume_inflight(self, events_df: DataFrame) -> None:
         """Resume in-flight sequences (alerta.py:491, 210-215).
 
-        Scale path first: documents of the same rule waiting on the
-        same slot are advanced by ONE scan + semi-join on their
-        captured values (SURVEY.md §7.4-1) — 10k in-flight alerts cost
-        a handful of Spark jobs, not 10k. With ``fused`` (the engine's
-        ``fuse_sequences`` flag) the per-group scans collapse further
-        AND the state never transits the driver: ALL fusable (rule,
-        slot) groups share one conditional-aggregate scan with a
-        broadcast value-probe, and updated documents are assembled
-        executor-side (`sequence_frames.resume_fused_frames`) — driver
-        memory scales with GROUP count (rules × slots), not in-flight
-        cardinality. Documents whose slot shape isn't fusable fall
-        back to the faithful batched/per-document paths (only those
-        are ever collected)."""
-        from collections import defaultdict
-
-        from alerta_spark.operators.sequence import (
-            first_unfilled_slot,
-            process_sequence_slot_batched,
+        ALL fusable (rule, slot) groups share one conditional-aggregate
+        scan with a broadcast value-probe, and updated documents are
+        assembled executor-side (`sequence_frames.resume_fused_frames`)
+        — driver memory scales with GROUP count (rules × slots), not
+        in-flight cardinality, and a pass with no in-flight store reads
+        nothing. Documents whose slot shape isn't fusable fall back to
+        the faithful batched/per-document paths (only those are ever
+        collected)."""
+        group_items, singles = resume_fused_frames(
+            events_df, self.inflight, self.alerts,
+            self.id_col, self.ts_col, spill_store=self.slot_events,
         )
-
-        singles: list[dict] = []
-        if fused:
-            from alerta_spark.operators.sequence_frames import (
-                resume_fused_frames,
-            )
-
-            unfused, stray = resume_fused_frames(
-                events_df, self.inflight, self.alerts,
-                self.id_col, self.ts_col, spill_store=self.slot_events,
-            )
-            singles.extend(stray)
-            group_items = unfused
-        else:
-            groups: dict[tuple[str, int], list[dict]] = defaultdict(list)
-            for doc in self.inflight.docs(newest_first=True):
-                idx, slot = first_unfilled_slot(doc)
-                if slot is None:
-                    continue
-                groups[(str(doc.get("alert_name", "")), idx)].append(doc)
-            group_items = list(groups.items())
 
         # deferred-upsert form: every batched group's updates land in
         # ONE state write (N groups used to cost N table swaps); the

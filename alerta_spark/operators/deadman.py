@@ -52,9 +52,6 @@ def deadman_alerts(
     synthesized = spark.range(1).select(
         F.lit(str(p["aggregation_key"])).alias("value"),
         F.lit(0).cast("long").alias("count"),
-        # empty array directly (as deadman_alerts_fused builds it) —
-        # a NULL-then-coalesce indirection implied a NULL-surviving
-        # path that never existed
         F.array().cast(events_type).alias("events"),
     )
     # keep the synthesized row only when the aggregate produced nothing
@@ -65,62 +62,3 @@ def deadman_alerts(
         synthesized
     )
     return assemble_alerts(fired, p, ev.schema)
-
-
-def deadman_alerts_fused(
-    df: DataFrame,
-    rules: list[dict[str, Any]],
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    max_events: int = 1000,
-) -> DataFrame:
-    """N deadman (absence) rules in ONE corpus scan — the fusion
-    symmetry of threshold_alerts_fused: shared (rule, key) tagged
-    aggregate, HAVING count <= each rule's threshold, and the
-    empty-input synthesis done PER RULE (a rule whose criteria matched
-    nothing anywhere still fires its (aggregation_key, 0) row, found
-    by anti-joining the tiny rule list against the rule_idxs present
-    in the aggregate — bounded by |rules|, never scan-sized).
-
-    Returns [rule_idx, alert_name, value, count, events] (rule_idx is
-    the unambiguous slice key — alert_names can collide); per-rule
-    equivalence with :func:`deadman_alerts` is pytest-pinned.
-    """
-    from alerta_spark.operators.threshold import fused_grouped
-    from alerta_spark.rules import deadman_shell
-
-    shells = [deadman_shell(r) for r in rules]
-    grouped = fused_grouped(df, shells, id_col, ts_col, max_events)
-    thresholds = F.array(*[F.lit(int(p["threshold"])) for p in shells])
-    names = F.array(*[F.lit(p["alert_name"]) for p in shells])
-    events_type = grouped.schema["events"].dataType
-
-    fired = grouped.where(
-        F.col("count") <= F.element_at(thresholds, F.col("rule_idx") + 1)
-    ).select("rule_idx", "value", "count", "events")
-
-    spark = df.sparkSession
-    all_rules = spark.createDataFrame(
-        [(i, str(p["aggregation_key"])) for i, p in enumerate(shells)],
-        "rule_idx int, agg_key string",
-    )
-    present = grouped.select("rule_idx").distinct()
-    synthesized = (
-        all_rules.join(present, "rule_idx", "left_anti")
-        .select(
-            "rule_idx",
-            F.col("agg_key").alias("value"),
-            F.lit(0).cast("long").alias("count"),
-            F.array().cast(events_type).alias("events"),
-        )
-    )
-    return (
-        fired.unionByName(synthesized)
-        .select(
-            "rule_idx",
-            F.element_at(names, F.col("rule_idx") + 1).alias("alert_name"),
-            "value",
-            "count",
-            "events",
-        )
-    )

@@ -26,12 +26,12 @@ few hundred bytes per document), not with captured-event volume.
 The fan-out optimization for many in-flight alerts of the same rule:
 alerts waiting on the same slot differ only in their templated values,
 so one scan with an IN-set/semi-join serves all of them
-(:func:`process_sequence_slot_batched`). The engine's fused tier goes
-further — N rules in one conditional-aggregate scan AND the state kept
-executor-side end to end — in operators/sequence_frames.py; this
-module holds the faithful driver-side paths (per-document resume, the
-batched per-group form, and the completion/expiry faces) that the
-frame tier falls back to for unfusable shapes. The fully distributed
+(:func:`process_sequence_slot_batched`). The engine's sequence tier
+goes further — N rules in one conditional-aggregate scan AND the state
+kept executor-side end to end — in operators/sequence_frames.py; this
+module holds the faithful driver-side paths (per-document advance and
+the batched per-group form) that the frame tier falls back to for
+unfusable shapes, plus the helpers both share. The fully distributed
 streaming version (state in Spark's state store, no driver loop) is
 streaming/correlator.py.
 """
@@ -53,7 +53,6 @@ from alerta_spark.rules import (
     generate_meteor_id,
     sequence_shell,
     threshold_shell,
-    utcnow,
 )
 from alerta_spark.state import DocStore, SlotEventStore
 from alerta_spark.templates import render_py, template_vars
@@ -217,49 +216,6 @@ def slim_captures(
     return docs, spill
 
 
-def _filter_replayed_completions(
-    completed: list[dict[str, Any]], alert_store: DocStore
-) -> list[dict[str, Any]]:
-    """Crash-replay guard shared by the completion faces: the emitted
-    alert keeps the in-flight document's ``_id``, so a pass that died
-    between the alerts append and the state overwrite leaves the
-    completed doc in-flight WITH its alert already written. Drop those
-    from the emission batch (their state still clears) so the rerun is
-    idempotent (reference analogue: the cron rerun + storage-level
-    dedup contract, SURVEY §1.4-5). Docs without an ``_id`` cannot be
-    matched and emit (they cannot have been written before — every
-    store writer stamps one)."""
-    from pyspark.sql import functions as F
-
-    ids = sorted({str(d["_id"]) for d in completed if d.get("_id")})
-    if not ids:
-        return completed
-    ids_df = alert_store.spark.createDataFrame([(x,) for x in ids], "_id string")
-    # bounded_frame: a replayed alert was written by the crashed pass
-    # (minutes ago), so the dedup-history mtime bound — when armed —
-    # keeps this guard O(window) too instead of a full-history scan
-    existing = {
-        r["_id"]
-        for r in alert_store.bounded_frame()
-        .join(F.broadcast(ids_df), "_id", "left_semi")
-        .select("_id")
-        .collect()
-    }
-    if not existing:
-        return completed
-    return [d for d in completed if str(d.get("_id")) not in existing]
-
-
-def _live_refs(docs: list[dict[str, Any]]) -> list[str]:
-    """Capture ids still referenced by any in-flight document."""
-    return [
-        s["_events_ref"]
-        for d in docs
-        for s in (d.get("slots") or [])
-        if isinstance(s, dict) and s.get("_events_ref")
-    ]
-
-
 def process_sequence_alert(
     events_df: DataFrame,
     doc: dict[str, Any],
@@ -378,112 +334,12 @@ def process_sequence_alert(
         inflight_store.upsert_many(updates)
 
 
-def create_sequence_alerts(
-    inflight_store: DocStore,
-    alert_store: DocStore,
-    spill_store: SlotEventStore | None = None,
-    prune: bool = True,
-) -> int:
-    """Emit alerts for fully-slotted sequences, drop their state
-    (reference: alerta.py:218-237). Returns number emitted.
-
-    Batched: one append to the alerts table + one state overwrite for
-    any number of completions (the reference pays two Mongo round-trips
-    per completed sequence). With ``spill_store`` the emission is
-    DISTRIBUTED: slim state documents join the spilled event payloads
-    by capture ref and the full documents (rehydrated events, rendered
-    summary, DOC_SCHEMA row) are assembled inside an Arrow UDF — the
-    completed alerts' event payloads never pass through the driver.
-    With ``prune`` the spill table is rewritten down to the refs that
-    remain in-flight; the ENGINE passes prune=False and prunes on its
-    compaction cadence instead, because a prune rewrites the whole
-    spill table (the payload volume) while dropped rows are merely
-    unreferenced garbage until then."""
-    completed, remaining = [], []
-    for doc in inflight_store.docs():
-        slots = doc.get("slots") or []
-        if slots and all("events" in s for s in slots):
-            completed.append(doc)
-        else:
-            remaining.append(doc)
-    if not completed:
-        return 0
-    to_emit = _filter_replayed_completions(completed, alert_store)
-    if spill_store is None:
-        emitted = []
-        for doc in to_emit:
-            doc = dict(doc)
-            doc["summary"] = render_py(str(doc.get("summary", "")), doc)
-            emitted.append(doc)
-        alert_store.append(emitted)
-    elif to_emit:
-        _emit_completed_distributed(to_emit, alert_store, spill_store)
-    inflight_store.overwrite(remaining)
-    if spill_store is not None and prune:
-        spill_store.prune(_live_refs(remaining))
-    return len(completed)
-
-
-def _emit_completed_distributed(
-    completed: list[dict[str, Any]],
-    alert_store: DocStore,
-    spill_store: SlotEventStore,
-) -> None:
-    """Assemble completed sequence documents EXECUTOR-side: the slim
-    in-flight docs (small, driver) join the spill table's full event
-    arrays by capture ref; rehydration, summary render (render_py is
-    pure Python) and DOC_SCHEMA row assembly (doc_to_row — the same
-    function the driver writer uses, so documents are identical) run
-    inside an Arrow-batched UDF. A ref missing from the spill table
-    (externally pruned / lost) degrades to the slim events rather than
-    failing the emission."""
-    from pyspark.sql import functions as F
-
-    from alerta_spark.state import DOC_SCHEMA, doc_to_row
-
-    spark = alert_store.spark
-    rows = []
-    for doc in completed:
-        refs = [
-            (i, s["_events_ref"])
-            for i, s in enumerate(doc.get("slots") or [])
-            if isinstance(s, dict) and s.get("_events_ref")
-        ]
-        rows.append(
-            (
-                json.dumps(doc, default=str),
-                [i for i, _ in refs],
-                [r for _, r in refs],
-            )
-        )
-    slim = spark.createDataFrame(
-        rows, "doc string, slot_idx array<int>, refs array<string>"
-    )
-    ex = slim.select(
-        "doc", F.explode_outer(F.arrays_zip("slot_idx", "refs")).alias("z")
-    ).select(
-        "doc",
-        F.col("z.slot_idx").alias("si"),
-        F.col("z.refs").alias("ref"),
-    )
-    spill = spill_store.frame()
-    joined = ex.join(spill, ex["ref"] == spill["capture_id"], "left").select(
-        "doc", "si", "events_json"
-    )
-    grouped = joined.groupBy("doc").agg(
-        F.collect_list(F.struct("si", "events_json")).alias("fills")
-    )
-    alert_store.append_rows(
-        grouped.mapInPandas(_assemble_completed_udf(), schema=DOC_SCHEMA)
-    )
-
-
 def _assemble_completed_udf():
-    """The completion-emission Arrow UDF, shared with the frame-native
-    tier (operators/sequence_frames.py): rehydrate slots from the
-    joined spill fills, render the summary (render_py is pure Python),
+    """The completion-emission Arrow UDF of the frame-native tier
+    (operators/sequence_frames.py): rehydrate slots from the joined
+    spill fills, render the summary (render_py is pure Python),
     assemble the DOC_SCHEMA row with the same doc_to_row the driver
-    writer uses — documents are identical across paths."""
+    writer uses — documents are identical to a driver-side write."""
     from alerta_spark.state import DOC_SCHEMA, doc_to_row
 
     cols = [f.name for f in DOC_SCHEMA.fields]
@@ -513,7 +369,7 @@ def _assemble_completed_udf():
 
 
 def _is_expired(doc: dict[str, Any], now: datetime) -> bool:
-    """Expiration test shared by the expiry faces (reference:
+    """Expiration test of the finalize routing (reference:
     alerta.py:240-248); unparseable expirations never expire."""
     exp = doc.get("expiration")
     try:
@@ -532,72 +388,6 @@ def _is_expired(doc: dict[str, Any], now: datetime) -> bool:
     return exp_dt is not None and exp_dt < now
 
 
-def expire_sequence_alerts(
-    inflight_store: DocStore,
-    now: datetime | None = None,
-    spill_store: SlotEventStore | None = None,
-    prune: bool = True,
-) -> int:
-    """Reap state past its expiration (reference: alerta.py:240-248);
-    with ``spill_store``, drop the reaped docs' spilled captures too
-    (``prune=False`` defers that rewrite to the engine's cadence)."""
-    now = now or utcnow()
-    kept, dropped = [], 0
-    for doc in inflight_store.docs():
-        if _is_expired(doc, now):
-            dropped += 1
-        else:
-            kept.append(doc)
-    if dropped:
-        inflight_store.overwrite(kept)
-        if spill_store is not None and prune:
-            spill_store.prune(_live_refs(kept))
-    return dropped
-
-
-def finalize_sequences(
-    inflight_store: DocStore,
-    alert_store: DocStore,
-    spill_store: SlotEventStore | None = None,
-    now: datetime | None = None,
-    prune: bool = True,
-) -> tuple[int, int]:
-    """Completion + expiry as ONE state read and ONE overwrite — the
-    engine's fused form of :func:`create_sequence_alerts` then
-    :func:`expire_sequence_alerts` (which each collect and each
-    rewrite the table; at 50k in-flight docs that is two redundant
-    50k-doc parses and an extra table swap per pass). Order semantics
-    preserved: a document that is both complete and past expiration
-    EMITS (create ran first in the reference loop, alerta.py:489-495).
-    Returns (completed, expired)."""
-    now = now or utcnow()
-    completed, kept, dropped = [], [], 0
-    for doc in inflight_store.docs():
-        slots = doc.get("slots") or []
-        if slots and all("events" in s for s in slots):
-            completed.append(doc)
-        elif _is_expired(doc, now):
-            dropped += 1
-        else:
-            kept.append(doc)
-    if completed:
-        to_emit = _filter_replayed_completions(completed, alert_store)
-        if spill_store is None:
-            emitted = []
-            for doc in to_emit:
-                doc = dict(doc)
-                doc["summary"] = render_py(str(doc.get("summary", "")), doc)
-                emitted.append(doc)
-            alert_store.append(emitted)
-        elif to_emit:
-            _emit_completed_distributed(to_emit, alert_store, spill_store)
-    if completed or dropped:
-        inflight_store.overwrite(kept)
-        if spill_store is not None and prune:
-            spill_store.prune(_live_refs(kept))
-    return len(completed), dropped
-
-
 import re as _re
 
 # Above this many captured values, a Column `.isin` probe (an In
@@ -605,9 +395,7 @@ import re as _re
 # Catalyst carries every literal through analysis, optimization and
 # codegen, so a 100k-value IN costs more to PLAN than to run. The
 # batched path switches to a broadcast semi-join on the same compiled
-# key; the fused path sends oversized groups to the batched path
-# (a join cannot be one rule's predicate inside the shared
-# conditional-aggregate scan).
+# key.
 ISIN_PROBE_MAX = 4096
 
 # templated equality conjunct shapes we can turn into a join key
@@ -886,8 +674,8 @@ def process_sequence_slot_batched(
 def _filter_slice_events_frame(
     slice_, ids_df, thr: int, id_col: str, hint_broadcast: bool = False
 ):
-    """Intra-pass F8/F9 replay shared by the fused passes: drop
-    events captured by EARLIER rules/groups this pass from the
+    """Intra-pass F8/F9 replay of the frame tier's starts and resume
+    passes: drop events captured by EARLIER rules/groups this pass from the
     collected sample, recompute the count exactly whenever the
     collection cap was not hit, re-apply the threshold.
 
@@ -938,28 +726,3 @@ def _filter_slice_events_frame(
         .alias("count"),
         "events",
     ).where((F.col("count") >= thr) & (F.size("events") > 0))
-
-
-def sequence_slots_fused_frame(
-    events_df: DataFrame,
-    slot_shells: list[dict[str, Any]],
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    extra_preds: list | None = None,
-) -> DataFrame:
-    """The one-scan conditional-aggregate core of sequence-rule
-    fusion: every fusable slot's criteria + aggregation key evaluated
-    as columns of a single events projection, exploded and aggregated
-    by (rule_idx, value) — N sequence rules cost ONE corpus scan and
-    ONE exchange, exactly the :func:`~alerta_spark.operators.
-    threshold.fused_grouped` shape threshold rules already use.
-    Exposed separately so tests can plan-guard the single-scan
-    property. -> [rule_idx, value, count, events]. ``extra_preds``
-    passes per-slot Column predicates through to
-    :func:`~alerta_spark.operators.threshold.fused_grouped` (the
-    resume path's captured-value IN probes)."""
-    from alerta_spark.operators.threshold import fused_grouped
-
-    return fused_grouped(
-        events_df, slot_shells, id_col, ts_col, extra_preds=extra_preds
-    )

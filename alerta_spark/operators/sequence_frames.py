@@ -1,15 +1,14 @@
 """Frame-native fused sequence tier — in-flight state stays executor-side.
 
-The driver-side fused path (operators/sequence.py) still round-trips
-every in-flight document through driver Python each pass: the engine
-collects ``DocStore.docs()`` to build resume groups, ``slim_captures``
-collects the fired slim rows, updates are deepcopied dicts re-serialized
-through ``createDataFrame``, and ``finalize_sequences`` collects the
-whole table again. The docs are slim (~1.5 KB stubs), but 50k in-flight
-groups still cost ~50k JSON parses + dict copies + re-serializations on
-the driver per pass — measured as driver max-RSS growing 207→782 MB
-across 5k→50k in-flight groups while the documents themselves were only
-73 MB.
+Driver-side sequence state handling round-trips every in-flight
+document through driver Python each pass: collecting
+``DocStore.docs()`` to build resume groups, collecting the fired slim
+rows, re-serializing deepcopied dicts through ``createDataFrame``, and
+collecting the whole table again to complete and expire. The docs are
+slim (~1.5 KB stubs), but 50k in-flight groups still cost ~50k JSON
+parses + dict copies + re-serializations on the driver per pass —
+measured as driver max-RSS growing 207→782 MB across 5k→50k in-flight
+groups while the documents themselves were only 73 MB.
 
 This module keeps the in-flight table AS A DATAFRAME end to end
 (reference analogue: the state scan feeding the correlator loop,
@@ -67,11 +66,9 @@ from pyspark.sql import types as T
 
 from alerta_spark.ckpt import checkpoint
 from alerta_spark.operators.sequence import (
-    _emit_completed_distributed,
     _is_expired,
     _referenced_event_indices,
     _slot_doc_from_row,
-    compile_templated_criteria,
     first_unfilled_slot,
 )
 from alerta_spark.rules import (
@@ -535,14 +532,13 @@ def resume_fused_frames(
 ) -> tuple[list[tuple[tuple[str, int], list[dict]]], list[dict]]:
     """Advance every fusable in-flight (rule, slot) group with ONE
     events scan and ZERO per-document driver materialization — the
-    frame-native successor of ``sequence_resume_fused`` (same return
-    contract: ``(unfused_groups, stray_docs)`` for the caller's
-    batched/per-document fallbacks; only THOSE documents are ever
-    collected).
+    frame-native resume. Returns ``(unfused_groups, stray_docs)``
+    for the caller's batched/per-document fallbacks; only THOSE
+    documents are ever collected.
 
     F9 intra-pass replay: captured event ids chain between group
     slices as FRAMES (``_filter_slice_events_frame`` — the same
-    mechanism the fused threshold pass uses), never as driver sets.
+    mechanism the starts pass uses), never as driver sets.
     The captured-value probe is a broadcast semi-join inside the
     shared scan, so group size has no plan-size cap (the driver
     ``ISIN_PROBE_MAX`` detour does not exist here)."""
@@ -903,11 +899,11 @@ def starts_fused_frames(
     spill_store: SlotEventStore | None = None,
 ) -> list[dict[str, Any]]:
     """Start N fresh sequence rules with ONE events scan AND zero
-    per-group driver materialization — the frame-native successor of
-    ``sequence_starts_fused`` (same contract: returns the rules it
-    could not fuse). Each fired group spawns its in-flight document
-    inside an Arrow UDF from the rule's (driver-computed, constant)
-    shell; fresh documents append to the state table executor-side."""
+    per-group driver materialization; returns the rules it could not
+    fuse, for the caller's per-rule loop. Each fired group spawns its
+    in-flight document inside an Arrow UDF from the rule's
+    (driver-computed, constant) shell; fresh documents append to the
+    state table executor-side."""
     from alerta_spark.dialect import trino_to_spark
     from alerta_spark.operators.dedup import (
         alerted_event_ids,
@@ -1071,9 +1067,8 @@ def flag_inflight(inf: DataFrame, now: datetime) -> DataFrame:
 
 def live_refs_frame(inflight_store: DocStore) -> DataFrame:
     """DataFrame[capture_id] of spill refs still referenced by any
-    in-flight document — the frame form of ``_live_refs`` for
-    ``SlotEventStore.prune_frame`` (live-ref cardinality tracks
-    in-flight cardinality; never collect it)."""
+    in-flight document, for ``SlotEventStore.prune_frame`` (live-ref
+    cardinality tracks in-flight cardinality; never collect it)."""
     flagged = flag_inflight(inflight_store.frame(), utcnow())
     return (
         flagged.select(F.explode("refs").alias("capture_id")).distinct()
@@ -1088,9 +1083,10 @@ def finalize_sequences_frames(
     prune: bool = True,
 ) -> tuple[int, int]:
     """Completion + expiry as ONE state read and ONE overwrite, with
-    no per-document driver materialization — the frame-native
-    successor of ``finalize_sequences`` (same contract and order
-    semantics; returns (completed, expired)). Completed documents emit
+    no per-document driver materialization; returns (completed,
+    expired). A document that is both complete and past expiration
+    EMITS (create ran before expire in the reference loop,
+    alerta.py:489-495). Completed documents emit
     through the shared spill-join/assemble UDF; kept rows overwrite
     the table straight from the frame."""
     now = now or utcnow()
@@ -1149,8 +1145,7 @@ def _emit_completed_frame(
     alert_store: DocStore,
     spill_store: SlotEventStore | None,
 ) -> None:
-    """Frame-fed core of the distributed completion emission (shared
-    assemble UDF with ``_emit_completed_distributed``): rehydrate each
+    """Frame-fed distributed completion emission: rehydrate each
     completed document's slots from the spill table by capture ref,
     render the summary, assemble the DOC_SCHEMA row — all inside the
     Arrow UDF, then append executor-side."""

@@ -23,7 +23,7 @@ state store instead (streaming/correlator.py).
 Mutations are MANIFEST-VERSIONED (the metadata-pointer half of what an
 ACID table format provides, built from two filesystem primitives):
 a ``_CURRENT`` file inside the table directory names the live version
-subdirectory (``_v-<counter>-<rand>/``); readers resolve it at plan-
+subdirectory (``v-<counter>-<rand>/``); readers resolve it at plan-
 build time, writers materialize a FRESH version directory and then
 atomically ``os.replace`` the manifest. Consequences, each pinned in
 tests/test_state.py:
@@ -48,10 +48,14 @@ tests/test_state.py:
   concurrent/straggling READERS and crashes no longer corrupt or
   lose state.
 
-Both the manifest and version directories are ``_``-prefixed, which
-Hadoop's hidden-path filter ignores, so pre-versioning table
-directories (bare parquet files at the root) keep reading correctly
-and migrate in place at their first overwrite.
+Version directories are NOT ``_``-prefixed: readers name them
+directly, and Spark warns ("All paths were ignored") on every read
+of a path its hidden-path filter would skip. Stores written with the
+earlier ``_v-`` prefix keep resolving and collecting. The manifest
+stays hidden, and a pre-versioning table directory (bare parquet
+files at the root) is read at the root only — its subdirectories are
+not part of its data — so it keeps reading correctly and migrates in
+place at its first overwrite.
 """
 
 from __future__ import annotations
@@ -290,7 +294,10 @@ def alert_docs_frame(alerts: DataFrame, id_field: str = "event_id") -> DataFrame
 
 
 _MANIFEST = "_CURRENT"
-_VERSION_PREFIX = "_v-"
+_VERSION_PREFIX = "v-"
+# every prefix a version directory may carry: the current one and the
+# hidden one of stores written before it
+_VERSION_PREFIXES = (_VERSION_PREFIX, "_v-")
 
 
 def _current_version(path: str) -> str | None:
@@ -304,8 +311,8 @@ def _current_version(path: str) -> str | None:
     except OSError:
         return None
     # refuse traversal-shaped or foreign content: the manifest names a
-    # single _v-* child of the table directory, nothing else
-    if not name.startswith(_VERSION_PREFIX) or "/" in name or "\\" in name:
+    # single version child of the table directory, nothing else
+    if not name.startswith(_VERSION_PREFIXES) or "/" in name or "\\" in name:
         return None
     return name
 
@@ -400,7 +407,7 @@ def _gc_versions(path: str, keep: set[str]) -> None:
     for entry in entries:
         full = os.path.join(path, entry)
         if (
-            entry.startswith(_VERSION_PREFIX)
+            entry.startswith(_VERSION_PREFIXES)
             and entry not in keep
             and os.path.isdir(full)
         ):

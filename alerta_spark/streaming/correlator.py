@@ -151,8 +151,8 @@ class SlotMachine:
     * **Fixed lifespan expiry** — ``deadline_ms`` is set ONCE when the
       state is created (first event + lifespan) and never slides
       (reference alerta.py:266-268 sets ``expiration = utctimestamp +
-      lifespan`` at creation; expire_sequence_alerts alerta.py:240-248
-      reaps past it). A chatty correlation key therefore still expires.
+      lifespan`` at creation; the reference's expiry reaper,
+      alerta.py:240-248, deletes state past it). A chatty correlation key therefore still expires.
     * **Deadman criteria participate** — a deadman slot's matching
       events are counted as evidence AGAINST the absence; when more
       than ``threshold`` matches arrive within the slot's absence
@@ -169,7 +169,7 @@ class SlotMachine:
       "absence for the remainder of the sequence's life": it fires at
       the fixed deadline unless over-budget matches latched a failure
       (then the sequence expires, mirroring the reference's silent
-      expire_sequence_alerts deletion).
+      expiry deletion).
     """
 
     def __init__(
@@ -975,8 +975,8 @@ def streaming_threshold_alerts_fused(
 
     OVERLAPPING-RULES DIVERGENCE from the batch engine (intentional,
     pytest-pinned in tests/test_streaming.py): when two rules' criteria
-    overlap, the BATCH fused pass replays the sequential loop's
-    intra-pass F8 interaction — rule k's slice drops events rules
+    overlap, the BATCH engine's rule-ordered loop has an intra-pass
+    F8 interaction — rule k's history probe sees the events rules
     1..k-1 captured this pass, so an event alerts at most once per
     pass. THIS streaming face counts every matching event for EVERY
     rule independently: it equals N single-rule streaming queries (the

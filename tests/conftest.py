@@ -40,6 +40,31 @@ def spark():
     yield s
 
 
+_PINS = Path(__file__).resolve().parent / "data" / "engine_parity.json"
+
+
+@pytest.fixture(scope="session")
+def _engine_pins():
+    import json
+
+    return json.loads(_PINS.read_text())
+
+
+@pytest.fixture()
+def pinned(_engine_pins):
+    """``pinned(key, value)`` asserts ``value`` equals the engine
+    output stored under ``key`` in tests/data/engine_parity.json. The
+    stored outputs were recorded from the per-rule (sequential) engine
+    paths on rule sets where those paths and the one-scan fused ones
+    produced identical documents."""
+
+    def check(key, value):
+        assert key in _engine_pins, f"no pinned output for {key!r}"
+        assert value == _engine_pins[key], key
+
+    return check
+
+
 @pytest.fixture(scope="session")
 def events(spark):
     from alerta_spark.sources.lake import load_events

@@ -37,52 +37,3 @@ def test_fires_per_group_at_or_below_threshold(cloudtrail_events):
     assert len(alerts) == 1
     assert alerts[0]["metadata"]["value"] == "Root"
     assert alerts[0]["metadata"]["count"] == 2
-
-
-def test_fused_deadman_matches_sequential(cloudtrail_events):
-    """N deadman rules in one scan == the per-rule loop, including the
-    PER-RULE empty-input synthesis (a rule matching nothing anywhere
-    still fires its zero row in the fused pass)."""
-    from alerta_spark.operators.deadman import deadman_alerts_fused
-
-    rules = [
-        dict(RULE, alert_name="r_present", threshold=5),       # fires per group
-        dict(RULE, alert_name="r_satisfied", threshold=0),     # count>0 -> silent
-        dict(
-            RULE,
-            alert_name="r_empty",
-            criteria="source='nonexistent'",
-            threshold=0,
-        ),                                                     # synthesized zero row
-    ]
-    fused = {
-        (r["alert_name"], r["value"], r["count"], len(r["events"]))
-        for r in deadman_alerts_fused(cloudtrail_events, rules).collect()
-    }
-    seq = set()
-    for rule in rules:
-        for a in deadman_alerts(cloudtrail_events, rule).collect():
-            seq.add(
-                (
-                    rule["alert_name"],
-                    a["metadata"]["value"],
-                    a["metadata"]["count"],
-                    len(a["events"]),
-                )
-            )
-    assert fused == seq
-    assert any(name == "r_empty" and c == 0 for name, _, c, _ in fused)
-    assert not any(name == "r_satisfied" for name, *_ in fused)
-
-
-def test_fused_deadman_single_scan(cloudtrail_events):
-    from alerta_spark.operators.deadman import deadman_alerts_fused
-
-    rules = [dict(RULE, alert_name=f"r{i}", threshold=5) for i in range(4)]
-    plan = (
-        deadman_alerts_fused(cloudtrail_events, rules)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("FileScan") <= 1, plan

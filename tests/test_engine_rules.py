@@ -182,10 +182,10 @@ def test_cli_run_from_config(spark, tmp_path):
         load_config(str(bad))
 
 
-def test_fused_engine_pass_matches_sequential(spark, events, tmp_path):
-    """run_once(fuse_thresholds=True) must append the identical alert
-    documents as the sequential per-rule pass — including a broken rule
-    that is swallowed in both modes."""
+def test_fused_engine_pass_matches_sequential(spark, events, tmp_path, pinned):
+    """The per-rule threshold pass appends the alert documents the
+    sequential and the one-scan fused passes agreed on — including a
+    broken rule, which is swallowed."""
     from alerta_spark.engine import Engine
 
     rules = [
@@ -213,37 +213,30 @@ def test_fused_engine_pass_matches_sequential(spark, events, tmp_path):
         },
     ]
 
-    def run(fused: bool, sub: str):
-        eng = Engine(spark, str(tmp_path / sub))
-        eng.run_once(events, rules, fuse_thresholds=fused)
-        docs = eng.alerts.docs()
-        out = set()
-        for d in docs:
-            out.add(
-                (
-                    d["alert_name"],
-                    d["metadata"]["value"],
-                    d["metadata"]["count"],
-                    d["summary"],
-                    tuple(e["event_id"] for e in d.get("events", [])),
-                )
-            )
-        return out
-
-    a = run(False, "seq")
-    b = run(True, "fused")
-    assert a == b and len(a) > 0
+    eng = Engine(spark, str(tmp_path / "seq"))
+    eng.run_once(events, rules)
+    a = sorted(
+        [
+            d["alert_name"],
+            d["metadata"]["value"],
+            d["metadata"]["count"],
+            d["summary"],
+            [e["event_id"] for e in d.get("events", [])],
+        ]
+        for d in eng.alerts.docs()
+    )
+    pinned("engine_rules.thresholds", a)
+    assert len(a) > 0
     assert not any(name == "broken_rule" for name, *_ in a)
 
 
 def test_fused_thresholds_overlapping_rules_match_sequential(
-    spark, events, tmp_path
+    spark, events, tmp_path, pinned
 ):
-    """Intra-pass F8 replay: in the sequential loop, rule k's history
-    probe already sees the alerts rules 1..k-1 wrote THIS pass, so two
-    rules capturing the SAME events fire only once. The fused pass
-    must replay that (regression: it used to snapshot the dedup set
-    once, so both of these identical rules fired)."""
+    """Intra-pass F8: in the per-rule loop, rule k's history probe
+    already sees the alerts rules 1..k-1 wrote THIS pass, so two rules
+    capturing the SAME events fire only once (the alerts the
+    sequential and fused passes agreed on)."""
     from alerta_spark.engine import Engine
 
     rule = {
@@ -259,34 +252,31 @@ def test_fused_thresholds_overlapping_rules_match_sequential(
         dict(rule, alert_name="overlap_c", threshold=1),  # subset overlap
     ]
 
-    def run(fused: bool, sub: str):
-        eng = Engine(spark, str(tmp_path / sub))
-        eng.run_once(events, rules, fuse_thresholds=fused)
-        out = set()
-        for d in eng.alerts.docs():
-            out.add(
-                (
-                    d["alert_name"],
-                    d["metadata"]["value"],
-                    d["metadata"]["count"],
-                    tuple(e["event_id"] for e in d.get("events", [])),
-                )
-            )
-        return out
-
-    a = run(False, "seq_ovl")
-    b = run(True, "fused_ovl")
-    assert a == b and len(a) > 0
+    eng = Engine(spark, str(tmp_path / "seq_ovl"))
+    eng.run_once(events, rules)
+    a = sorted(
+        [
+            d["alert_name"],
+            d["metadata"]["value"],
+            d["metadata"]["count"],
+            [e["event_id"] for e in d.get("events", [])],
+        ]
+        for d in eng.alerts.docs()
+    )
+    pinned("engine_rules.overlapping_thresholds", a)
+    assert len(a) > 0
     # the overlap actually bound: rule A fired, identical rule B did not
     names = {name for name, *_ in a}
     assert "overlap_a" in names and "overlap_b" not in names
 
 
-def test_fused_deadman_engine_pass_matches_sequential(spark, events, tmp_path):
-    """run_once(fuse_deadmen=True) appends identical alert documents
-    to the per-rule pass — including the broken-criteria rule, which
-    FIRES in both modes (deadman failure semantics: absence of
-    evidence is the alarm)."""
+def test_fused_deadman_engine_pass_matches_sequential(
+    spark, events, tmp_path, pinned
+):
+    """The per-rule deadman pass appends the alert documents the
+    sequential and the one-scan fused passes agreed on — including the
+    broken-criteria rule, which FIRES (deadman failure semantics:
+    absence of evidence is the alarm)."""
     from alerta_spark.engine import Engine
 
     rules = [
@@ -314,25 +304,56 @@ def test_fused_deadman_engine_pass_matches_sequential(spark, events, tmp_path):
         },
     ]
 
-    def run(fused: bool, sub: str):
-        eng = Engine(spark, str(tmp_path / sub))
-        eng.run_once(events, rules, fuse_deadmen=fused)
-        return {
-            (
-                d["alert_name"],
-                d["metadata"]["value"],
-                d["metadata"]["count"],
-                tuple(e["event_id"] for e in d.get("events", [])),
-            )
-            for d in eng.alerts.docs()
-        }
-
-    a = run(False, "dm_seq")
-    b = run(True, "dm_fused")
-    assert a == b and len(a) > 0
+    eng = Engine(spark, str(tmp_path / "dm_seq"))
+    eng.run_once(events, rules)
+    a = sorted(
+        [
+            d["alert_name"],
+            d["metadata"]["value"],
+            d["metadata"]["count"],
+            [e["event_id"] for e in d.get("events", [])],
+        ]
+        for d in eng.alerts.docs()
+    )
+    pinned("engine_rules.deadmen", a)
+    assert len(a) > 0
     names = {n for n, *_ in a}
     assert "dm_quiet_type" in names and "dm_broken" in names
     assert "dm_satisfied" not in names
+
+
+def test_pass_without_sequence_rules_never_reads_inflight(
+    spark, events, tmp_path, monkeypatch
+):
+    """A threshold + deadman pass has no sequence state to resume or
+    finalize: it must not collect the in-flight store (each such read
+    costs Spark jobs on every cron tick)."""
+    from alerta_spark.state import DocStore
+
+    def refuse(self, *a, **k):
+        raise AssertionError(f"in-flight read: {self.path}")
+
+    monkeypatch.setattr(DocStore, "docs", refuse)
+    rules = [
+        {
+            "alert_name": "errors_by_user",
+            "alert_type": "threshold",
+            "criteria": "event_type='error'",
+            "aggregation_key": "user_id",
+            "threshold": 3,
+        },
+        {
+            "alert_name": "dm_quiet_type",
+            "alert_type": "deadman",
+            "criteria": "event_type='nonexistent_kind'",
+            "aggregation_key": "user_id",
+            "threshold": 0,
+        },
+    ]
+    eng = Engine(spark, str(tmp_path / "no_seq"))
+    eng.run_once(events, rules)
+    names = {r["alert_name"] for r in eng.alerts.frame().collect()}
+    assert names == {"errors_by_user", "dm_quiet_type"}
 
 
 def test_suppression_window_silences_rule(spark, tmp_path, events):

@@ -9,9 +9,10 @@ import pytest
 
 from alerta_spark.engine import Engine
 from alerta_spark.operators.sequence import (
-    expire_sequence_alerts,
     first_unfilled_slot,
+    process_sequence_slot_batched,
 )
+from alerta_spark.operators.sequence_frames import finalize_sequences_frames
 from alerta_spark.rules import sequence_shell, utcnow
 from alerta_spark.templates import render_py
 
@@ -151,11 +152,10 @@ def test_sequence_threshold_then_deadman(spark, engine):
 
 
 def test_finalize_completed_and_expired_emits(spark, engine):
-    """finalize_sequences order semantics: a document that is BOTH
-    fully slotted and past expiration EMITS (create ran before expire
-    in the reference loop) — and expiry still reaps the incomplete."""
-    from alerta_spark.operators.sequence import finalize_sequences
-
+    """finalize_sequences_frames order semantics: a document that is
+    BOTH fully slotted and past expiration EMITS (create ran before
+    expire in the reference loop) — and expiry still reaps the
+    incomplete."""
     done = sequence_shell(json.loads(json.dumps(SEQ_RULE)))
     done["expiration"] = "2020-01-01T00:00:00+00:00"  # long past
     for s in done["slots"]:
@@ -168,7 +168,7 @@ def test_finalize_completed_and_expired_emits(spark, engine):
     stale["expiration"] = "2020-01-01T00:00:00+00:00"
     engine.inflight.upsert_many([done, stale])
 
-    n_done, n_dropped = finalize_sequences(
+    n_done, n_dropped = finalize_sequences_frames(
         engine.inflight, engine.alerts, spill_store=engine.slot_events
     )
     assert (n_done, n_dropped) == (1, 1)
@@ -180,11 +180,34 @@ def test_finalize_completed_and_expired_emits(spark, engine):
 def test_expiry_reaps_state(spark, engine):
     doc = sequence_shell(dict(SEQ_RULE, lifespan="1 hours"))
     engine.inflight.upsert(doc)
-    assert expire_sequence_alerts(engine.inflight, now=utcnow()) == 0
-    assert expire_sequence_alerts(
-        engine.inflight, now=utcnow() + timedelta(days=1)
-    ) == 1
+    assert finalize_sequences_frames(
+        engine.inflight, engine.alerts, now=utcnow()
+    ) == (0, 0)
+    assert finalize_sequences_frames(
+        engine.inflight, engine.alerts, now=utcnow() + timedelta(days=1)
+    ) == (0, 1)
     assert engine.inflight.docs() == []
+
+
+def test_sequence_expiry_honours_eval_time(spark, engine):
+    """``eval_time`` is the instant a pass starts and expires
+    sequences at: a 1-day sequence started at t is reaped by a pass
+    at t + 30 days, whatever the wall clock reads."""
+    from datetime import datetime, timezone
+
+    rule = json.loads(json.dumps(SEQ_RULE))
+    rule["lifespan"] = "1 days"
+    t = datetime(2026, 1, 1, tzinfo=timezone.utc)
+    ev = _onelogin_events(
+        spark, [dict(RISKY, user_name=u) for u in ("a1", "a2", "a3")]
+    )
+    engine.run_once(ev, [rule], eval_time=t)
+    started = engine.inflight.docs()
+    assert len(started) == 3
+    assert {d["utctimestamp"] for d in started} == {t.isoformat()}
+    engine.run_once(ev.limit(0), [rule], eval_time=t + timedelta(days=30))
+    assert engine.inflight.docs() == []
+    assert engine.alerts.docs() == []
 
 
 def test_compile_templated_criteria_reference_shapes():
@@ -284,25 +307,16 @@ def test_batched_slot_advance_many_docs(spark, engine):
 
     ev2 = ev2.withColumn("event_id", F.col("event_id") + 500)
 
-    # pin the ROUTE, not just the result: the batched semi-join path
-    # must serve every one of these docs (leftover == []); the
-    # per-document loop stays a compatibility fallback only
-    import alerta_spark.operators.sequence as seqmod
-
-    orig = seqmod.process_sequence_slot_batched
-    batched_calls = []
-
-    def spy(*a, **k):
-        out = orig(*a, **k)
-        batched_calls.append(out)
-        return out
-
-    seqmod.process_sequence_slot_batched = spy
-    try:
-        engine.run_once(ev2, [SEQ_RULE])
-    finally:
-        seqmod.process_sequence_slot_batched = orig
-    assert batched_calls and all(lo == [] for lo in batched_calls)
+    # the batched semi-join path serves every one of these docs
+    # (leftover == []); the per-document loop is its fallback only
+    leftover = process_sequence_slot_batched(
+        ev2, inflight, 1, engine.inflight, engine.alerts,
+        spill_store=engine.slot_events,
+    )
+    assert leftover == []
+    finalize_sequences_frames(
+        engine.inflight, engine.alerts, spill_store=engine.slot_events
+    )
 
     done = engine.alerts.docs()
     assert {d["slots"][0]["metadata"]["value"] for d in done} == hit
@@ -329,6 +343,14 @@ def _strip_volatile(doc):
 
     walk(d)
     return d
+
+
+def _pin_docs(docs):
+    """Volatile-stripped documents in a stable order, as pinned."""
+    return sorted(
+        (_strip_volatile(d) for d in docs),
+        key=lambda d: json.dumps(d, sort_keys=True),
+    )
 
 
 def _seq_rules():
@@ -363,11 +385,11 @@ def _seq_rules():
     return rules
 
 
-def test_sequence_starts_fused_matches_sequential(spark, tmp_path):
-    """fuse_sequences=True must spawn the same in-flight documents as
-    the per-rule loop (modulo generated ids/timestamps) — including
-    the unfusable deadman-slot rule, which must route through the
-    faithful fallback."""
+def test_sequence_starts_fused_matches_sequential(spark, tmp_path, pinned):
+    """The frame-tier starts pass spawns the in-flight documents the
+    per-rule loop and the fused pass agreed on (modulo generated
+    ids/timestamps) — including the unfusable deadman-slot rule, which
+    must route through the faithful per-rule fallback."""
     rows = [
         dict(RISKY, user_name="alice", risk_score="95"),
         dict(RISKY, user_name="alice", risk_score="85"),
@@ -376,21 +398,12 @@ def test_sequence_starts_fused_matches_sequential(spark, tmp_path):
     ]
     rules = _seq_rules()
 
-    seq_eng = Engine(spark, str(tmp_path / "seq"), id_col="event_id", ts_col="ts")
-    seq_eng.run_once(_onelogin_events(spark, rows), rules)
     fus_eng = Engine(spark, str(tmp_path / "fus"), id_col="event_id", ts_col="ts")
-    fus_eng.run_once(
-        _onelogin_events(spark, rows), rules, fuse_sequences=True
-    )
+    fus_eng.run_once(_onelogin_events(spark, rows), rules)
 
-    def canon(docs):
-        return sorted(
-            (json.dumps(_strip_volatile(d), sort_keys=True) for d in docs)
-        )
-
-    assert canon(fus_eng.inflight.docs()) == canon(seq_eng.inflight.docs())
-    assert canon(fus_eng.alerts.docs()) == canon(seq_eng.alerts.docs())
-    # sanity on content, not just parity — the INTRA-PASS dedup
+    pinned("sequence.starts.inflight", _pin_docs(fus_eng.inflight.docs()))
+    pinned("sequence.starts.alerts", _pin_docs(fus_eng.alerts.docs()))
+    # sanity on content, not just the pins — the INTRA-PASS dedup
     # interaction is the hard part of the equivalence: seq_low runs
     # first and captures alice's, bob's, and carol's matching events,
     # so seq_mid/seq_high (whose criteria overlap) find those events
@@ -414,7 +427,7 @@ def test_sequence_fused_frame_is_single_scan(spark, events):
     """N fused sequence slots must cost ONE parquet scan (the fusion
     contract): the conditional-aggregate frame's physical plan reads
     the events table exactly once, with no nested-loop join."""
-    from alerta_spark.operators.sequence import sequence_slots_fused_frame
+    from alerta_spark.operators.threshold import fused_grouped
     from alerta_spark.rules import threshold_shell
 
     shells = [
@@ -428,18 +441,17 @@ def test_sequence_fused_frame_is_single_scan(spark, events):
         )
         for i, et in enumerate(["purchase", "error", "login"])
     ]
-    frame = sequence_slots_fused_frame(events, shells)
+    frame = fused_grouped(events, shells)
     plan = frame._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan parquet") == 1
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_sequence_resume_fused_matches_sequential(spark, tmp_path):
-    """Pass 2 with fuse_sequences=True must advance MANY rules' slot-1
-    in-flight docs through ONE shared scan and write the same
-    documents as the per-group batched loop."""
-    import alerta_spark.operators.sequence as seqmod
+def test_sequence_resume_fused_matches_sequential(spark, tmp_path, pinned):
+    """Pass 2 must advance MANY rules' slot-1 in-flight docs through
+    ONE shared frame-tier scan and write the documents the per-group
+    batched loop and the fused resume agreed on."""
 
     def mk_rule(name):
         r = json.loads(json.dumps(SEQ_RULE))
@@ -457,41 +469,30 @@ def test_sequence_resume_fused_matches_sequential(spark, tmp_path):
         spark, [dict(RISKY, user_name=u) for u in ("u1", "u3")]
     ).withColumn("event_id", F.col("event_id") + 500)
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"st_{mode}"), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(ev1, rules, fuse_sequences=mode)
-        eng.run_once(ev2, rules, fuse_sequences=mode)
-        return eng
-
-    import alerta_spark.operators.sequence_frames as sfmod
+    import alerta_spark.engine as engmod
 
     calls = []
-    orig = sfmod.resume_fused_frames
+    orig = engmod.resume_fused_frames
 
     def spy(*a, **k):
         out = orig(*a, **k)
         calls.append(out)
         return out
 
-    sfmod.resume_fused_frames = spy
+    engmod.resume_fused_frames = spy
     try:
-        fus = run(True)
-    finally:
-        sfmod.resume_fused_frames = orig
-    seq = run(False)
-
-    # the fused path actually served every group (nothing fell back)
-    assert calls and all(unfused == [] and stray == [] for unfused, stray in calls)
-
-    def canon(docs):
-        return sorted(
-            (json.dumps(_strip_volatile(d), sort_keys=True) for d in docs)
+        fus = Engine(
+            spark, str(tmp_path / "st"), id_col="event_id", ts_col="ts"
         )
+        fus.run_once(ev1, rules)
+        fus.run_once(ev2, rules)
+    finally:
+        engmod.resume_fused_frames = orig
 
-    assert canon(fus.inflight.docs()) == canon(seq.inflight.docs())
-    assert canon(fus.alerts.docs()) == canon(seq.alerts.docs())
+    pinned("sequence.resume.inflight", _pin_docs(fus.inflight.docs()))
+    pinned("sequence.resume.alerts", _pin_docs(fus.alerts.docs()))
+    # the frame tier actually served every group (nothing fell back)
+    assert calls and all(unfused == [] and stray == [] for unfused, stray in calls)
     # content sanity: u1/u3 sequences completed, u2/u4 still waiting
     done = {d["slots"][0]["metadata"]["value"] for d in fus.alerts.docs()}
     assert done == {"u1", "u3"}
@@ -499,13 +500,12 @@ def test_sequence_resume_fused_matches_sequential(spark, tmp_path):
     assert waiting == {"u2", "u4"}
 
 
-def test_sequence_resume_fused_special_char_values(spark, tmp_path):
+def test_sequence_resume_fused_special_char_values(spark, tmp_path, pinned):
     """Captured values containing backslashes (DOMAIN\\user principals)
-    or quotes must advance under the fused path exactly like the
-    batched one. Regression: the fused probe used to render values
+    or quotes must advance under the frame tier exactly like the
+    batched path. Regression: the fused probe used to render values
     into a SQL IN literal where the parser ate backslash escapes, so
     'DOM\\alice' silently never advanced."""
-    import alerta_spark.operators.sequence as seqmod
 
     users = ["DOM\\alice", "o'brien", "plain_user"]
     ev1 = _onelogin_events(spark, [dict(RISKY, user_name=u) for u in users])
@@ -515,50 +515,40 @@ def test_sequence_resume_fused_special_char_values(spark, tmp_path):
         spark, [dict(RISKY, user_name=u) for u in users]
     ).withColumn("event_id", F.col("event_id") + 500)
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"sc_{mode}"), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(ev1, [SEQ_RULE], fuse_sequences=mode)
-        eng.run_once(ev2, [SEQ_RULE], fuse_sequences=mode)
-        return eng
-
-    import alerta_spark.operators.sequence_frames as sfmod
+    import alerta_spark.engine as engmod
 
     calls = []
-    orig = sfmod.resume_fused_frames
+    orig = engmod.resume_fused_frames
 
     def spy(*a, **k):
         out = orig(*a, **k)
         calls.append(out)
         return out
 
-    sfmod.resume_fused_frames = spy
+    engmod.resume_fused_frames = spy
     try:
-        fus = run(True)
+        fus = Engine(
+            spark, str(tmp_path / "sc"), id_col="event_id", ts_col="ts"
+        )
+        fus.run_once(ev1, [SEQ_RULE])
+        fus.run_once(ev2, [SEQ_RULE])
     finally:
-        sfmod.resume_fused_frames = orig
-    seq = run(False)
+        engmod.resume_fused_frames = orig
 
-    # the fused path served the group (no fallback hid the bug)
+    pinned("sequence.special_chars.alerts", _pin_docs(fus.alerts.docs()))
+    pinned("sequence.special_chars.inflight", _pin_docs(fus.inflight.docs()))
+    # the frame tier served the group (no fallback hid the bug)
     assert calls and all(unfused == [] and stray == [] for unfused, stray in calls)
     done = {d["slots"][0]["metadata"]["value"] for d in fus.alerts.docs()}
     assert done == set(users)
-
-    def canon(docs):
-        return sorted(
-            (json.dumps(_strip_volatile(d), sort_keys=True) for d in docs)
-        )
-
-    assert canon(fus.alerts.docs()) == canon(seq.alerts.docs())
-    assert canon(fus.inflight.docs()) == canon(seq.inflight.docs())
 
 
 def test_batched_resume_intra_pass_f9_across_groups(spark, tmp_path):
     """Two RULES whose slot-1 criteria match the same events, both
     in-flight: the first group's capture this pass must hide those
     events from the second group's scan (sequential-loop F9), and the
-    whole resume must cost ONE state write regardless of group count."""
+    deferred form must cost ONE state write regardless of group count
+    (the groups collect updates; the caller writes them once)."""
     import alerta_spark.state as statemod
 
     def mk(name, kind):
@@ -578,7 +568,8 @@ def test_batched_resume_intra_pass_f9_across_groups(spark, tmp_path):
     )
     eng = Engine(spark, str(tmp_path / "store"), id_col="event_id", ts_col="ts")
     eng.run_once(ev1, rules)
-    assert len(eng.inflight.docs()) == 2  # both rules waiting on slot 1
+    docs = eng.inflight.docs()
+    assert len(docs) == 2  # both rules waiting on slot 1
 
     from pyspark.sql import functions as F
 
@@ -595,9 +586,21 @@ def test_batched_resume_intra_pass_f9_across_groups(spark, tmp_path):
 
     statemod.DocStore.upsert_many = spy
     try:
-        eng.run_once(ev2, rules)
+        captured: set[str] = set()
+        pending: list[dict] = []
+        for doc in docs:  # one (rule, slot) group per rule
+            assert process_sequence_slot_batched(
+                ev2, [doc], 1, eng.inflight, eng.alerts,
+                spill_store=eng.slot_events,
+                extra_alerted_ids=captured, collect_updates=pending,
+            ) == []
+        assert writes == []  # deferred: the groups wrote nothing
+        eng.inflight.upsert_many(pending)
     finally:
         statemod.DocStore.upsert_many = orig
+    finalize_sequences_frames(
+        eng.inflight, eng.alerts, spill_store=eng.slot_events
+    )
 
     alerts = eng.alerts.docs()
     done = {a["alert_name"] for a in alerts}
@@ -607,13 +610,13 @@ def test_batched_resume_intra_pass_f9_across_groups(spark, tmp_path):
     # semantics; group order follows the state scan, so either name)
     assert len(done) == 1 and len(waiting) == 1
     assert done | waiting == {"ga", "gb"}
-    # the resume advanced its groups with ONE state write
+    # the groups were advanced with ONE state write
     assert len(writes) == 1, writes
 
 
 def test_batched_resume_one_write_for_many_groups(spark, tmp_path):
-    """N (rule, slot) groups ALL firing in one resume pass must cost
-    ONE in-flight state write (the deferred-upsert form), not one
+    """N (rule, slot) groups ALL firing through the batched path must
+    cost ONE in-flight state write (the deferred-upsert form), not one
     table swap per group."""
     import alerta_spark.state as statemod
 
@@ -633,7 +636,8 @@ def test_batched_resume_one_write_for_many_groups(spark, tmp_path):
     )
     eng = Engine(spark, str(tmp_path / "store"), id_col="event_id", ts_col="ts")
     eng.run_once(ev1, rules)
-    assert len(eng.inflight.docs()) == 3
+    docs = eng.inflight.docs()
+    assert len(docs) == 3
 
     from pyspark.sql import functions as F
 
@@ -651,9 +655,20 @@ def test_batched_resume_one_write_for_many_groups(spark, tmp_path):
 
     statemod.DocStore.upsert_many = spy
     try:
-        eng.run_once(ev2, rules)
+        captured: set[str] = set()
+        pending: list[dict] = []
+        for doc in docs:  # one (rule, slot) group per rule
+            assert process_sequence_slot_batched(
+                ev2, [doc], 1, eng.inflight, eng.alerts,
+                spill_store=eng.slot_events,
+                extra_alerted_ids=captured, collect_updates=pending,
+            ) == []
+        eng.inflight.upsert_many(pending)
     finally:
         statemod.DocStore.upsert_many = orig
+    finalize_sequences_frames(
+        eng.inflight, eng.alerts, spill_store=eng.slot_events
+    )
 
     assert {a["alert_name"] for a in eng.alerts.docs()} == {"rua", "rub", "ruc"}
     assert eng.inflight.docs() == []
@@ -663,11 +678,10 @@ def test_batched_resume_one_write_for_many_groups(spark, tmp_path):
 def test_large_probe_sets_route_to_semi_join(spark, tmp_path, monkeypatch):
     """The frame-native fused resume probes captured values via a
     broadcast semi-join frame — NO plan-size cap applies to it. The
-    driver-side batched path (non-fused engine, unfusable-group
-    fallback) still switches from an N-literal IN to a broadcast
-    semi-join past ISIN_PROBE_MAX; both regimes must produce identical
-    results, including backslash-carrying values the Column build
-    exists for."""
+    driver-side batched path (the unfusable-group fallback) still
+    switches from an N-literal IN to a broadcast semi-join past
+    ISIN_PROBE_MAX; both must produce identical results, including
+    backslash-carrying values the Column build exists for."""
     import alerta_spark.operators.sequence as seqmod
 
     users = ["DOM\\u1", "u2", "u3", "u4", "u5"]
@@ -678,29 +692,25 @@ def test_large_probe_sets_route_to_semi_join(spark, tmp_path, monkeypatch):
         spark, [dict(RISKY, user_name=u) for u in users[:3]]
     ).withColumn("event_id", F.col("event_id") + 500)
 
-    def run(tag, fused):
-        eng = Engine(spark, str(tmp_path / f"probe_{tag}"), id_col="event_id", ts_col="ts")
-        eng.run_once(ev1, [SEQ_RULE], fuse_sequences=fused)
-        eng.run_once(ev2, [SEQ_RULE], fuse_sequences=fused)
-        return eng
+    big = Engine(spark, str(tmp_path / "probe_frame"), id_col="event_id", ts_col="ts")
+    big.run_once(ev1, [SEQ_RULE])
+    big.run_once(ev2, [SEQ_RULE])  # frame path: join probe, no cap
 
-    big = run("frame_probe", True)  # frame path: join probe, no cap
-
-    # cap the batched path's IN budget so the NON-fused engine's
-    # resume exercises the broadcast semi-join branch for all 5 values
+    # cap the batched path's IN budget so its resume exercises the
+    # broadcast semi-join branch for all 5 values
     monkeypatch.setattr(seqmod, "ISIN_PROBE_MAX", 2)
-    batch_sizes = []
-    orig = seqmod.process_sequence_slot_batched
-
-    def spy(events_df, docs, *a, **k):
-        batch_sizes.append(len(docs))
-        return orig(events_df, docs, *a, **k)
-
-    monkeypatch.setattr(seqmod, "process_sequence_slot_batched", spy)
-    small = run("semi_join", False)
-
-    # the capped run actually probed past the IN budget
-    assert batch_sizes and max(batch_sizes) > 2
+    small = Engine(spark, str(tmp_path / "probe_semi_join"), id_col="event_id", ts_col="ts")
+    small.run_once(ev1, [SEQ_RULE])
+    docs = small.inflight.docs()
+    # the capped run actually probes past the IN budget
+    assert len(docs) > seqmod.ISIN_PROBE_MAX
+    assert seqmod.process_sequence_slot_batched(
+        ev2, docs, 1, small.inflight, small.alerts,
+        spill_store=small.slot_events,
+    ) == []
+    finalize_sequences_frames(
+        small.inflight, small.alerts, spill_store=small.slot_events
+    )
 
     def canon(docs):
         return sorted(
@@ -785,14 +795,12 @@ def test_expiry_prunes_spill(spark, engine):
     rule["lifespan"] = "1 hours"
     engine.run_once(ev, [rule])
     assert engine.slot_events.frame().count() == 1
-    assert (
-        expire_sequence_alerts(
-            engine.inflight,
-            now=utcnow() + timedelta(days=1),
-            spill_store=engine.slot_events,
-        )
-        == 1
-    )
+    assert finalize_sequences_frames(
+        engine.inflight,
+        engine.alerts,
+        spill_store=engine.slot_events,
+        now=utcnow() + timedelta(days=1),
+    ) == (0, 1)
     assert engine.slot_events.frame().count() == 0
 
 
@@ -845,10 +853,9 @@ def test_keep_full_template_shape_falls_back(spark, engine):
 
 
 def test_engine_stream_fused_sequences_match_batch(spark, tmp_path):
-    """T1 parity with fusion on: run_stream(availableNow,
-    fuse_sequences=True) executes the same cron body per micro-batch —
-    one backlog batch must leave the same sequence state as a
-    sequential run_once over the same events."""
+    """T1 parity for sequences: run_stream(availableNow) executes the
+    same cron body per micro-batch — one backlog batch must leave the
+    same sequence state as a run_once over the same events."""
     ev = _onelogin_events(
         spark, [dict(RISKY, user_name=u) for u in ("a1", "a2", "a3")]
     )
@@ -859,9 +866,7 @@ def test_engine_stream_fused_sequences_match_batch(spark, tmp_path):
     s_eng = Engine(
         spark, str(tmp_path / "s_store"), id_col="event_id", ts_col="ts"
     )
-    q = s_eng.run_stream(
-        stream, [SEQ_RULE], str(tmp_path / "ck"), fuse_sequences=True
-    )
+    q = s_eng.run_stream(stream, [SEQ_RULE], str(tmp_path / "ck"))
     q.awaitTermination(120)
 
     b_eng = Engine(
@@ -959,9 +964,9 @@ def test_batched_resume_duplicate_values_both_processed(spark, tmp_path):
 
 
 def test_fused_pass_never_collects_inflight_docs(spark, tmp_path, monkeypatch):
-    """The frame-native fused pass must keep in-flight state
+    """The frame-native sequence pass must keep in-flight state
     executor-side end to end: DocStore.docs() (the driver collect)
-    must not run at all during a fuse_sequences pass — driver memory
+    must not run at all during an engine pass — driver memory
     scales with GROUP count, not in-flight cardinality. Unfusable
     shapes are the only sanctioned exception (none in this rule set)."""
     import alerta_spark.state as statemod
@@ -987,8 +992,8 @@ def test_fused_pass_never_collects_inflight_docs(spark, tmp_path, monkeypatch):
         spark, str(tmp_path / "nocollect"), id_col="event_id", ts_col="ts",
         compact_every=2,  # pass 2 hits the cadence -> prune path too
     )
-    eng.run_once(ev1, [SEQ_RULE], fuse_sequences=True)
-    eng.run_once(ev2, [SEQ_RULE], fuse_sequences=True)
+    eng.run_once(ev1, [SEQ_RULE])
+    eng.run_once(ev2, [SEQ_RULE])
 
     assert calls == [], calls
     # the pass still did its job: all three sequences completed
@@ -998,15 +1003,32 @@ def test_fused_pass_never_collects_inflight_docs(spark, tmp_path, monkeypatch):
     assert eng.inflight.frame().count() == 0
 
 
-@pytest.mark.parametrize("fused", [False, True])
+def _fallback_rule():
+    """SEQ_RULE with its slot-1 template inside concat(): not an
+    equality the frame tier compiles, so the resume of that slot takes
+    the driver-side per-document path."""
+    rule = json.loads(json.dumps(SEQ_RULE))
+    rule["alert_name"] = "per_document_seq"
+    rule["slots"][1]["criteria"] = (
+        "source='onelogin' AND concat("
+        "'{{slots.0.events.0.details.user_name}}','')="
+        "json_extract_scalar(details,'$.user_name')"
+    )
+    return rule
+
+
+@pytest.mark.parametrize("fallback", [False, True])
 @pytest.mark.parametrize("use_reliable", [False, True])
-def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch, fused, use_reliable):
+def test_crash_replay_is_idempotent(
+    spark, tmp_path, monkeypatch, fallback, use_reliable
+):
     """A pass that dies between the alerts append and the state
     overwrite (the crash window of the emit->overwrite sequence) must
     replay cleanly on the next cron tick: no double-fired alert (the
     completed doc's _id is already in the alerts store — the replay
     guard skips it), no lost state (the completed doc still clears).
-    Pinned under both checkpoint regimes and both sequence paths."""
+    Pinned under both checkpoint regimes, with the completing slot
+    advanced by the frame tier and by the per-document fallback."""
     import alerta_spark.state as statemod
     from alerta_spark.ckpt import RELIABLE_CONF
 
@@ -1021,16 +1043,17 @@ def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch, fused, use_rel
             spark, [dict(RISKY, sourceipaddress="9.9.9.9")]
         ).withColumn("event_id", F.col("event_id") + 100)
 
+        rules = [_fallback_rule() if fallback else SEQ_RULE]
         control = Engine(
             spark, str(tmp_path / "ctl"), id_col="event_id", ts_col="ts"
         )
-        control.run_once(ev1, [SEQ_RULE], fuse_sequences=fused)
-        control.run_once(ev2, [SEQ_RULE], fuse_sequences=fused)
+        control.run_once(ev1, rules)
+        control.run_once(ev2, rules)
 
         crash = Engine(
             spark, str(tmp_path / "crash"), id_col="event_id", ts_col="ts"
         )
-        crash.run_once(ev1, [SEQ_RULE], fuse_sequences=fused)
+        crash.run_once(ev1, rules)
 
         # die on the INFLIGHT overwrite that follows the alerts append
         # (pass 2's finalize emits first — the alerts store is non-empty
@@ -1044,7 +1067,7 @@ def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch, fused, use_rel
 
         monkeypatch.setattr(statemod.DocStore, "overwrite_frame", dying)
         with pytest.raises(RuntimeError, match="simulated death"):
-            crash.run_once(ev2, [SEQ_RULE], fuse_sequences=fused)
+            crash.run_once(ev2, rules)
         monkeypatch.setattr(statemod.DocStore, "overwrite_frame", orig)
 
         # the crash window is real: alert written, state NOT cleared
@@ -1052,7 +1075,7 @@ def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch, fused, use_rel
         assert len(crash.inflight.docs()) == 1
 
         # the cron replay: same events, unpatched
-        crash.run_once(ev2, [SEQ_RULE], fuse_sequences=fused)
+        crash.run_once(ev2, rules)
 
         def canon(docs):
             return sorted(
@@ -1067,14 +1090,14 @@ def test_crash_replay_is_idempotent(spark, tmp_path, monkeypatch, fused, use_rel
         spark.conf.set(RELIABLE_CONF, "false")
 
 
-def test_fused_resume_unfusable_group_falls_back(spark, tmp_path):
+def test_fused_resume_unfusable_group_falls_back(spark, tmp_path, pinned):
     """An in-flight group whose NEXT slot is a deadman routes through
     the frame tier's DEADMAN face (fused since round 9 — before that,
     the collected per-document fallback) and still advances/completes
     on absence — side by side with a fusable threshold group in the
-    same fused pass — producing byte-identical documents (including
-    the RENDERED criteria the per-document path records) to the
-    non-fused engine."""
+    same pass — producing the documents (including the RENDERED
+    criteria the per-document path records) the per-document and the
+    fused resume agreed on."""
     deadman_rule = json.loads(json.dumps(SEQ_RULE))
     deadman_rule["alert_name"] = "seq_then_silence"
     # disjoint slot-0 (bob only): intra-pass F9 must not let the other
@@ -1102,23 +1125,12 @@ def test_fused_resume_unfusable_group_falls_back(spark, tmp_path):
     # absence; SEQ_RULE's threshold slot 1 finds nothing
     ev2 = ev1.where("source='nope'")
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"dm_{mode}"), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(ev1, rules, fuse_sequences=mode)
-        eng.run_once(ev2, rules, fuse_sequences=mode)
-        return eng
+    fus = Engine(spark, str(tmp_path / "dm"), id_col="event_id", ts_col="ts")
+    fus.run_once(ev1, rules)
+    fus.run_once(ev2, rules)
 
-    fus, seq = run(True), run(False)
-
-    def canon(docs):
-        return sorted(
-            json.dumps(_strip_volatile(d), sort_keys=True) for d in docs
-        )
-
-    assert canon(fus.alerts.docs()) == canon(seq.alerts.docs())
-    assert canon(fus.inflight.docs()) == canon(seq.inflight.docs())
+    pinned("sequence.deadman_resume.alerts", _pin_docs(fus.alerts.docs()))
+    pinned("sequence.deadman_resume.inflight", _pin_docs(fus.inflight.docs()))
     done = {d["alert_name"] for d in fus.alerts.docs()}
     assert done == {"seq_then_silence"}  # deadman completed on absence
     waiting = {d["alert_name"] for d in fus.inflight.docs()}
@@ -1154,7 +1166,7 @@ def test_fused_resume_duplicate_value_stray(spark, tmp_path):
     ev = _onelogin_events(spark, [RISKY]).withColumn(
         "event_id", F.col("event_id") + 100
     )
-    eng.run_once(ev, [SEQ_RULE], fuse_sequences=True)
+    eng.run_once(ev, [SEQ_RULE])
 
     # ONE new event -> one doc captured it (completed), the duplicate
     # found it already captured and stays in flight
@@ -1162,11 +1174,12 @@ def test_fused_resume_duplicate_value_stray(spark, tmp_path):
     assert len(eng.inflight.docs()) == 1
 
 
-def test_fused_keep_full_template_keeps_full_events(spark, tmp_path):
+def test_fused_keep_full_template_keeps_full_events(spark, tmp_path, pinned):
     """A rule whose summary references the slot's WHOLE events array
     ({{slots.0.events}}) cannot be slimmed — the frame tier must take
     the keep_full path (full payloads in the document, no spill ref)
-    and still produce documents identical to the non-fused engine."""
+    and still produce the documents the per-document and the fused
+    paths agreed on."""
     rule = json.loads(json.dumps(SEQ_RULE))
     rule["alert_name"] = "full_events_seq"
     rule["summary"] = "captured: {{slots.0.events}}"
@@ -1178,22 +1191,11 @@ def test_fused_keep_full_template_keeps_full_events(spark, tmp_path):
         spark, [dict(RISKY, sourceipaddress="9.9.9.9")]
     ).withColumn("event_id", F.col("event_id") + 100)
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"kf_{mode}"), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(ev1, [rule], fuse_sequences=mode)
-        eng.run_once(ev2, [rule], fuse_sequences=mode)
-        return eng
+    fus = Engine(spark, str(tmp_path / "kf"), id_col="event_id", ts_col="ts")
+    fus.run_once(ev1, [rule])
+    fus.run_once(ev2, [rule])
 
-    fus, seq = run(True), run(False)
-
-    def canon(docs):
-        return sorted(
-            json.dumps(_strip_volatile(d), sort_keys=True) for d in docs
-        )
-
-    assert canon(fus.alerts.docs()) == canon(seq.alerts.docs())
+    pinned("sequence.keep_full.alerts", _pin_docs(fus.alerts.docs()))
     [alert] = fus.alerts.docs()
     # slot 0's events carry FULL payloads (details present), and the
     # doc holds no spill ref
@@ -1232,10 +1234,12 @@ def test_fused_probe_frame_plan_is_single_scan_broadcast_semi(spark, events):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_fused_starts_rule_with_explicit_id_matches_sequential(spark, tmp_path):
+def test_fused_starts_rule_with_explicit_id_matches_sequential(
+    spark, tmp_path, pinned
+):
     """A rule dict carrying an explicit _id makes every spawned doc
-    share it; the sequential path's upsert keeps last-wins ONE. The
-    fused path must route the degenerate shape to the faithful loop,
+    share it; the per-rule path's upsert keeps last-wins ONE. The
+    frame tier must route the degenerate shape to the faithful loop,
     not append N same-_id rows."""
     rule = json.loads(json.dumps(SEQ_RULE))
     rule["_id"] = "fixedid0123456789abcdef0"
@@ -1244,15 +1248,10 @@ def test_fused_starts_rule_with_explicit_id_matches_sequential(spark, tmp_path):
         [RISKY, dict(RISKY, user_name="bob")],  # two fired groups
     )
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"id_{mode}"), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(ev, [rule], fuse_sequences=mode)
-        return eng
-
-    fus, seq = run(True), run(False)
-    assert len(fus.inflight.docs()) == len(seq.inflight.docs()) == 1
+    fus = Engine(spark, str(tmp_path / "id"), id_col="event_id", ts_col="ts")
+    fus.run_once(ev, [rule])
+    pinned("sequence.explicit_id.inflight", _pin_docs(fus.inflight.docs()))
+    assert len(fus.inflight.docs()) == 1
     assert {d["_id"] for d in fus.inflight.docs()} == {rule["_id"]}
 
 
@@ -1285,14 +1284,14 @@ def test_crash_after_spill_append_then_compaction_is_idempotent(
     control = Engine(
         spark, str(tmp_path / "ctl"), id_col="event_id", ts_col="ts"
     )
-    control.run_once(ev1, [SEQ_RULE], fuse_sequences=True)
-    control.run_once(ev2, [SEQ_RULE], fuse_sequences=True)
+    control.run_once(ev1, [SEQ_RULE])
+    control.run_once(ev2, [SEQ_RULE])
 
     crash = Engine(
         spark, str(tmp_path / "crash"), id_col="event_id", ts_col="ts"
     )
     if crash_pass == 2:
-        crash.run_once(ev1, [SEQ_RULE], fuse_sequences=True)
+        crash.run_once(ev1, [SEQ_RULE])
 
     # die right AFTER the spill append lands (the append itself
     # succeeds — the orphan rows are on disk) and before the
@@ -1306,7 +1305,7 @@ def test_crash_after_spill_append_then_compaction_is_idempotent(
     monkeypatch.setattr(statemod.SlotEventStore, "append_frame", dying)
     crash_events = ev1 if crash_pass == 1 else ev2
     with pytest.raises(RuntimeError, match="after spill append"):
-        crash.run_once(crash_events, [SEQ_RULE], fuse_sequences=True)
+        crash.run_once(crash_events, [SEQ_RULE])
     monkeypatch.setattr(statemod.SlotEventStore, "append_frame", orig)
 
     # the window is real: spill rows exist that no in-flight doc
@@ -1327,9 +1326,9 @@ def test_crash_after_spill_append_then_compaction_is_idempotent(
     assert after == live_ids & spill_ids
 
     # cron replay of the crashed pass, unpatched
-    crash.run_once(crash_events, [SEQ_RULE], fuse_sequences=True)
+    crash.run_once(crash_events, [SEQ_RULE])
     if crash_pass == 1:
-        crash.run_once(ev2, [SEQ_RULE], fuse_sequences=True)
+        crash.run_once(ev2, [SEQ_RULE])
 
     def canon(docs):
         return sorted(
@@ -1352,7 +1351,9 @@ def test_crash_after_spill_append_then_compaction_is_idempotent(
         assert stored <= live
 
 
-def test_fused_deadman_face_threshold_and_no_collect(spark, tmp_path, monkeypatch):
+def test_fused_deadman_face_threshold_and_no_collect(
+    spark, tmp_path, monkeypatch, pinned
+):
     """The frame tier's deadman face, beyond the absence case: a
     captured value PRESENT with 1 <= count <= threshold fires with its
     REAL events (not the synthesized row); present with count >
@@ -1386,15 +1387,6 @@ def test_fused_deadman_face_threshold_and_no_collect(spark, tmp_path, monkeypatc
                 dict(RISKY, user_name="bob")]
     ).withColumn("event_id", F.col("event_id") + 100)
 
-    def run(mode):
-        eng = Engine(
-            spark, str(tmp_path / f"dmt_{mode}"),
-            id_col="event_id", ts_col="ts",
-        )
-        eng.run_once(ev1, [dm_rule], fuse_sequences=mode)
-        eng.run_once(ev2, [dm_rule], fuse_sequences=mode)
-        return eng
-
     calls: list[str] = []
     orig = statemod.DocStore.docs
 
@@ -1403,18 +1395,16 @@ def test_fused_deadman_face_threshold_and_no_collect(spark, tmp_path, monkeypatc
         return orig(self, *a, **k)
 
     monkeypatch.setattr(statemod.DocStore, "docs", spying)
-    fus = run(True)
-    assert calls == [], calls  # deadman face stays frame-native
+    fus = Engine(
+        spark, str(tmp_path / "dmt"), id_col="event_id", ts_col="ts"
+    )
+    fus.run_once(ev1, [dm_rule])
+    fus.run_once(ev2, [dm_rule])
     monkeypatch.setattr(statemod.DocStore, "docs", orig)
-    seq = run(False)
 
-    def canon(docs):
-        return sorted(
-            json.dumps(_strip_volatile(d), sort_keys=True) for d in docs
-        )
-
-    assert canon(fus.alerts.docs()) == canon(seq.alerts.docs())
-    assert canon(fus.inflight.docs()) == canon(seq.inflight.docs())
+    pinned("sequence.deadman_face.alerts", _pin_docs(fus.alerts.docs()))
+    pinned("sequence.deadman_face.inflight", _pin_docs(fus.inflight.docs()))
+    assert calls == [], calls  # deadman face stays frame-native
     done = fus.alerts.docs()
     assert len(done) == 1  # alice completed
     slot1 = done[0]["slots"][1]
@@ -1425,8 +1415,7 @@ def test_fused_deadman_face_threshold_and_no_collect(spark, tmp_path, monkeypatc
     # bob's ORIGINAL doc still waits on the deadman slot (count 2 > 1
     # blocked the advance) — plus the fresh slot-0 start his two new
     # pass-2 events fired (they were never captured, so F8 lets the
-    # starts pass spawn a second sequence; parity with the non-fused
-    # engine asserted above)
+    # starts pass spawn a second sequence; pinned above)
     assert len(waiting) == 2
     from alerta_spark.operators.sequence import first_unfilled_slot as _fus
 
@@ -1581,18 +1570,15 @@ def _two_var_rule(name="two_var_seq", extra_slot=False, deadman=False,
     }
 
 
-def _canon_docs(docs):
-    return sorted(
-        json.dumps(_strip_volatile(d), sort_keys=True) for d in docs
-    )
-
-
-def test_fused_multi_templated_resume_matches_sequential(spark, tmp_path):
+def test_fused_multi_templated_resume_matches_sequential(
+    spark, tmp_path, pinned
+):
     """A slot criteria pinning TWO captured values must advance through
     the frame-native fused tier (composite-value probe) with documents
-    byte-identical to the non-fused engine — both the COMPLETED
-    sequence (2-slot rule) and the still-in-flight fired slot with its
-    reconstructed RENDERED criteria (3-slot rule). A user whose second
+    identical to the ones the per-document path and the fused resume
+    agreed on — both the COMPLETED sequence (2-slot rule) and the
+    still-in-flight fired slot with its reconstructed RENDERED
+    criteria (3-slot rule). A user whose second
     component diverges (same user_name, different source ip) must NOT
     advance — the shape a single-value probe cannot express."""
     rules = [
@@ -1620,20 +1606,12 @@ def test_fused_multi_templated_resume_matches_sequential(spark, tmp_path):
         )
     ]
 
-    def run(tag, fused):
-        eng = Engine(
-            spark, str(tmp_path / tag), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(_events_src(spark, rows1, "onelogin"), rules,
-                     fuse_sequences=fused)
-        eng.run_once(_events_src(spark, rows2, "onelogin", base=100), rules,
-                     fuse_sequences=fused)
-        return eng
+    fus = Engine(spark, str(tmp_path / "mt"), id_col="event_id", ts_col="ts")
+    fus.run_once(_events_src(spark, rows1, "onelogin"), rules)
+    fus.run_once(_events_src(spark, rows2, "onelogin", base=100), rules)
 
-    seq = run("mt_seq", False)
-    fus = run("mt_fus", True)
-    assert _canon_docs(fus.alerts.docs()) == _canon_docs(seq.alerts.docs())
-    assert _canon_docs(fus.inflight.docs()) == _canon_docs(seq.inflight.docs())
+    pinned("sequence.multi_var.alerts", _pin_docs(fus.alerts.docs()))
+    pinned("sequence.multi_var.inflight", _pin_docs(fus.inflight.docs()))
     done = {d["slots"][0]["metadata"]["value"] for d in fus.alerts.docs()}
     assert done == {"alice", "bob"}  # mt_done completed for both
     # mt_tail advanced its multi slot and waits on slot 2 with the
@@ -1652,12 +1630,14 @@ def test_fused_multi_templated_resume_matches_sequential(spark, tmp_path):
     assert first_unfilled_slot(waiting[("mt_done", "carol")])[0] == 1
 
 
-def test_fused_multi_templated_deadman_matches_sequential(spark, tmp_path):
+def test_fused_multi_templated_deadman_matches_sequential(
+    spark, tmp_path, pinned
+):
     """Deadman (absence) slots with TWO template variables fuse too:
     a heartbeat matching only ONE component (same user, different ip)
     leaves the composite ABSENT, so the sequence advances — while the
-    fully-matching composite blocks. Documents byte-identical to the
-    non-fused engine."""
+    fully-matching composite blocks. Documents identical to the ones
+    the per-document path and the fused resume agreed on."""
     rules = [_two_var_rule("mt_dm", deadman=True)]
     rows1 = [
         {"risk_score": "95", "user_name": "alice", "sourceipaddress": "1.1.1.1"},
@@ -1671,20 +1651,14 @@ def test_fused_multi_templated_deadman_matches_sequential(spark, tmp_path):
         {"user_name": "bob", "sourceipaddress": "9.9.9.9"},
     ]
 
-    def run(tag, fused):
-        eng = Engine(
-            spark, str(tmp_path / tag), id_col="event_id", ts_col="ts"
-        )
-        eng.run_once(_events_src(spark, rows1, "onelogin"), rules,
-                     fuse_sequences=fused)
-        eng.run_once(_events_src(spark, beats, "heartbeat", base=100), rules,
-                     fuse_sequences=fused)
-        return eng
+    fus = Engine(spark, str(tmp_path / "mtdm"), id_col="event_id", ts_col="ts")
+    fus.run_once(_events_src(spark, rows1, "onelogin"), rules)
+    fus.run_once(_events_src(spark, beats, "heartbeat", base=100), rules)
 
-    seq = run("mtdm_seq", False)
-    fus = run("mtdm_fus", True)
-    assert _canon_docs(fus.alerts.docs()) == _canon_docs(seq.alerts.docs())
-    assert _canon_docs(fus.inflight.docs()) == _canon_docs(seq.inflight.docs())
+    pinned("sequence.multi_var_deadman.alerts", _pin_docs(fus.alerts.docs()))
+    pinned(
+        "sequence.multi_var_deadman.inflight", _pin_docs(fus.inflight.docs())
+    )
     done = {d["slots"][0]["metadata"]["value"] for d in fus.alerts.docs()}
     assert done == {"bob"}
     still = {d["slots"][0]["metadata"]["value"] for d in fus.inflight.docs()}
@@ -1724,10 +1698,8 @@ def test_fused_multi_templated_no_collect_and_sql_special_values(
         {"risk_score": "10", "user_name": "a'b", "sourceipaddress": "x\ty"},
     ]
     eng = Engine(spark, str(tmp_path / "mt_nc"), id_col="event_id", ts_col="ts")
-    eng.run_once(_events_src(spark, rows1, "onelogin"), rules,
-                 fuse_sequences=True)
-    eng.run_once(_events_src(spark, rows2, "onelogin", base=100), rules,
-                 fuse_sequences=True)
+    eng.run_once(_events_src(spark, rows1, "onelogin"), rules)
+    eng.run_once(_events_src(spark, rows2, "onelogin", base=100), rules)
 
     assert calls == [], calls
     monkeypatch.setattr(statemod.DocStore, "docs", orig)
@@ -1782,14 +1754,15 @@ def test_composite_value_byte_parity_with_spark_to_json(spark):
     assert got == want
 
 
-def test_literal_templated_conjunct_routes_per_document(spark, tmp_path):
+def test_literal_templated_conjunct_routes_per_document(
+    spark, tmp_path, pinned
+):
     """A templated equality whose 'column' side is not a resolvable
     event column (e.g. the literal `1='{{...}}'` — the \\w+ equality
     patterns match it) must NOT fuse: the composite probe key would
     be NULL for every event and the group would silently never fire.
     It routes to the per-document path, which renders working SQL
-    (`1='1'` is true), so the sequence advances — identically on the
-    fused and non-fused engines."""
+    (`1='1'` is true), so the sequence advances."""
     rule = _two_var_rule("lit_seq")
     rule["slots"][1]["criteria"] = (
         "source='onelogin' AND 1='{{slots.0.metadata.count}}' AND "
@@ -1803,16 +1776,10 @@ def test_literal_templated_conjunct_routes_per_document(spark, tmp_path):
         {"risk_score": "10", "user_name": "alice", "sourceipaddress": "1.1.1.1"}
     ]
 
-    def run(tag, fused):
-        eng = Engine(spark, str(tmp_path / tag), id_col="event_id", ts_col="ts")
-        eng.run_once(_events_src(spark, rows1, "onelogin"), [rule],
-                     fuse_sequences=fused)
-        eng.run_once(_events_src(spark, rows2, "onelogin", base=100), [rule],
-                     fuse_sequences=fused)
-        return eng
+    fus = Engine(spark, str(tmp_path / "lit"), id_col="event_id", ts_col="ts")
+    fus.run_once(_events_src(spark, rows1, "onelogin"), [rule])
+    fus.run_once(_events_src(spark, rows2, "onelogin", base=100), [rule])
 
-    seq = run("lit_seq", False)
-    fus = run("lit_fus", True)
-    assert _canon_docs(fus.alerts.docs()) == _canon_docs(seq.alerts.docs())
+    pinned("sequence.literal_conjunct.alerts", _pin_docs(fus.alerts.docs()))
     assert len(fus.alerts.docs()) == 1  # it DID advance and complete
     assert fus.inflight.docs() == []

@@ -444,7 +444,7 @@ def _version_dirs(path):
     return sorted(
         e
         for e in os.listdir(path)
-        if e.startswith("_v-") and os.path.isdir(os.path.join(path, e))
+        if e.startswith("v-") and os.path.isdir(os.path.join(path, e))
     )
 
 
@@ -479,14 +479,14 @@ def test_versioned_overwrite_crash_before_flip_keeps_old(spark, tmp_path):
     store = DocStore(spark, str(tmp_path / "alerts"))
     store.append([_doc(1)])
     # simulate the crashed writer's unflipped output
-    orphan = os.path.join(store.path, "_v-0000000099-deadbeef")
+    orphan = os.path.join(store.path, "v-0000000099-deadbeef")
     spark.createDataFrame([doc_to_row(_doc(9))], DOC_SCHEMA).coalesce(
         1
     ).write.parquet(orphan)
     assert [d["_id"] for d in store.docs()] == ["d" + "0" * 22 + "1"]
     store.overwrite([_doc(2)])
     assert [d["_id"] for d in store.docs()] == ["d" + "0" * 22 + "2"]
-    assert "_v-0000000099-deadbeef" not in _version_dirs(store.path)
+    assert "v-0000000099-deadbeef" not in _version_dirs(store.path)
 
 
 def test_versioned_migration_from_legacy_layout(spark, tmp_path):
@@ -520,6 +520,42 @@ def test_versioned_migration_from_legacy_layout(spark, tmp_path):
     assert not [
         f for f in os.listdir(root) if f.endswith(".parquet")
     ], "superseded legacy root files must be GC'd after migration"
+
+
+def test_versioned_store_with_hidden_legacy_prefix(spark, tmp_path):
+    """A store whose manifest names a version directory with the
+    earlier hidden ``_v-`` prefix keeps reading and appending there;
+    its next overwrite writes a visible ``v-`` version (Spark warns on
+    every read of a ``_``-prefixed path), keeps the ``_v-`` one as the
+    grace generation, and the overwrite after that collects it."""
+    import os
+
+    from alerta_spark.state import DOC_SCHEMA, doc_to_row
+
+    root = str(tmp_path / "hidden")
+    legacy = "_v-0000000001-0badf00d"
+    spark.createDataFrame([doc_to_row(_doc(1))], DOC_SCHEMA).coalesce(
+        1
+    ).write.parquet(os.path.join(root, legacy))
+    with open(os.path.join(root, "_CURRENT"), "w") as f:
+        f.write(legacy)
+    store = DocStore(spark, root)
+    assert store.data_dir() == os.path.join(root, legacy)
+    store.append([_doc(2)])  # lands inside the current _v- version
+    assert store.data_dir() == os.path.join(root, legacy)
+    assert {d["_id"] for d in store.docs()} == {
+        "d" + "0" * 22 + "1",
+        "d" + "0" * 22 + "2",
+    }
+    store.upsert(_doc(3))
+    current = os.path.basename(store.data_dir())
+    assert current.startswith("v-0000000002-")
+    assert os.path.isdir(os.path.join(root, legacy))  # grace generation
+    assert len(store.docs()) == 3
+    store.upsert(_doc(4))
+    assert not os.path.isdir(os.path.join(root, legacy))
+    assert not [e for e in os.listdir(root) if e.startswith("_v-")]
+    assert len(store.docs()) == 4
 
 
 def test_versioned_gc_keeps_exactly_two_generations(spark, tmp_path):

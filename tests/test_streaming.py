@@ -775,12 +775,12 @@ def test_streaming_fused_thresholds_match_per_rule(spark):
 
 def test_streaming_fused_overlap_diverges_from_batch(spark, tmp_path):
     """Pin the DOCUMENTED batch<->streaming divergence on overlapping
-    fused threshold rules: the batch fused pass replays intra-pass F8
-    (rule 2 must NOT re-alert the events rule 1 captured this pass),
-    while the streaming fused aggregate counts overlapping captures
-    per rule (== N independent single-rule queries, no history probe).
-    Guards the round-6 batch replay fix from being misread as a
-    streaming guarantee."""
+    threshold rules: the batch engine's rule-ordered loop applies
+    intra-pass F8 (rule 2 must NOT re-alert the events rule 1 captured
+    this pass), while the streaming fused aggregate counts overlapping
+    captures per rule (== N independent single-rule queries, no
+    history probe). Guards the batch semantics from being misread as
+    a streaming guarantee."""
     from alerta_spark.engine import Engine
     from alerta_spark.streaming.correlator import (
         streaming_threshold_alerts_fused,
@@ -807,7 +807,7 @@ def test_streaming_fused_overlap_diverges_from_batch(spark, tmp_path):
 
     # batch: same criteria, rule-ordered loop semantics -> only rule 1
     eng = Engine(spark, str(tmp_path / "overlap_store"))
-    eng.run_once(ev, overlapping, fuse_thresholds=True)
+    eng.run_once(ev, overlapping)
     batch_fired = sorted(
         (d["alert_name"], d["metadata"]["value"]) for d in eng.alerts.docs()
     )
@@ -1045,7 +1045,7 @@ def test_correlator_expiry_is_not_followed_by(spark):
 def test_sequence_correlator_fused_rules_match_singles(spark):
     """N rules through ONE streaming query + state store (the fused
     correlator) must emit exactly the union of N single-rule runs —
-    the streaming face of the engine's fuse_sequences."""
+    the streaming face of the engine's one-scan sequence pass."""
     import json as _json
 
     risky = lambda u, score=95: {"risk_score": str(score), "user_name": u}  # noqa: E731

@@ -317,19 +317,18 @@ def main() -> None:
             results[key] = {}
     # warm: JVM, parquet writer, python workers
     warm = Engine(spark, tempfile.mkdtemp(prefix="ab_warm_"))
-    warm.run_once(_events(spark, 50, 0), _mk_rules("threshold")[:2],
-                  fuse_thresholds=True)
+    warm.run_once(_events(spark, 50, 0), _mk_rules("threshold")[:2])
 
     for g in group_scales:
         ev1 = _events(spark, g, 0).cache()
         ev1.count()
 
-        # --- fused THRESHOLD pass: N_RULES x g fired groups, all
-        # emission through the distributed writer
+        # --- THRESHOLD pass (one scan per rule): N_RULES x g fired
+        # groups, all emission through the distributed writer
         if "threshold" in axes:
             eng = Engine(spark, tempfile.mkdtemp(prefix=f"ab_thr_{g}_"))
             t0 = time.perf_counter()
-            eng.run_once(ev1, _mk_rules("threshold"), fuse_thresholds=True)
+            eng.run_once(ev1, _mk_rules("threshold"))
             dt = round(time.perf_counter() - t0, 3)
             n_alerts = eng.alerts.frame().count()
             results[k_thr][str(g)] = {
@@ -349,11 +348,11 @@ def main() -> None:
             engd = Engine(spark, tempfile.mkdtemp(prefix=f"ab_dm_{g}_"))
             rules_dm = _mk_rules("sequence_deadman")
             t0 = time.perf_counter()
-            engd.run_once(ev1, rules_dm, fuse_sequences=True)
+            engd.run_once(ev1, rules_dm)
             t_s = round(time.perf_counter() - t0, 3)
             n_inf = engd.inflight.frame().count()
             t0 = time.perf_counter()
-            engd.run_once(ev1.limit(0), rules_dm, fuse_sequences=True)
+            engd.run_once(ev1.limit(0), rules_dm)
             t_r = round(time.perf_counter() - t0, 3)
             n_al = engd.alerts.frame().count()
             results[k_dm][str(g)] = {
@@ -377,13 +376,13 @@ def main() -> None:
             engm = Engine(spark, tempfile.mkdtemp(prefix=f"ab_mv_{g}_"))
             rules_m = _mk_rules("sequence_multivar")
             t0 = time.perf_counter()
-            engm.run_once(ev1, rules_m, fuse_sequences=True)
+            engm.run_once(ev1, rules_m)
             t_s = round(time.perf_counter() - t0, 3)
             n_inf = engm.inflight.frame().count()
             ev2m = _events(spark, g, 30_000_000).cache()
             ev2m.count()
             t0 = time.perf_counter()
-            engm.run_once(ev2m, rules_m, fuse_sequences=True)
+            engm.run_once(ev2m, rules_m)
             t_r = round(time.perf_counter() - t0, 3)
             n_al = engm.alerts.frame().count()
             results[k_mv][str(g)] = {
@@ -410,13 +409,13 @@ def main() -> None:
             engu = Engine(spark, tempfile.mkdtemp(prefix=f"ab_unf_{g}_"))
             rules_u = _mk_rules("sequence_unfused")
             t0 = time.perf_counter()
-            engu.run_once(ev1, rules_u, fuse_sequences=True)
+            engu.run_once(ev1, rules_u)
             t_s = round(time.perf_counter() - t0, 3)
             n_inf = engu.inflight.frame().count()
             ev2u = _events(spark, g, 20_000_000).cache()
             ev2u.count()
             t0 = time.perf_counter()
-            engu.run_once(ev2u, rules_u, fuse_sequences=True)
+            engu.run_once(ev2u, rules_u)
             t_r = round(time.perf_counter() - t0, 3)
             n_al = engu.alerts.frame().count()
             results[k_unf][str(g)] = {
@@ -490,8 +489,7 @@ def main() -> None:
                                 _os.utime(p, (epoch, epoch))
                                 stamped.add(p)
                 t0 = time.perf_counter()
-                engh.run_once(ev_h, _mk_rules("threshold"),
-                              fuse_thresholds=True)
+                engh.run_once(ev_h, _mk_rules("threshold"))
                 hist_times[f"sec_{tag}"] = round(time.perf_counter() - t0, 3)
                 # the bare F8 probe, isolated from the pass's fixed
                 # overhead (the signal the full-pass timing buries in
@@ -528,18 +526,18 @@ def main() -> None:
         if "sequence" not in axes:
             ev1.unpersist()
             continue
-        # --- fused SEQUENCE starts + resume: in-flight slot state is
+        # --- SEQUENCE starts + resume: in-flight slot state is
         # the documented driver-side tier — measure its growth honestly
         eng2 = Engine(spark, tempfile.mkdtemp(prefix=f"ab_seq_{g}_"))
         t0 = time.perf_counter()
-        eng2.run_once(ev1, _mk_rules("sequence"), fuse_sequences=True)
+        eng2.run_once(ev1, _mk_rules("sequence"))
         t_start = round(time.perf_counter() - t0, 3)
         n_inflight = eng2.inflight.frame().count()
         doc_b, spill_b = _state_bytes(eng2)
         ev2 = _events(spark, g, 10_000_000).cache()
         ev2.count()
         t0 = time.perf_counter()
-        eng2.run_once(ev2, _mk_rules("sequence"), fuse_sequences=True)
+        eng2.run_once(ev2, _mk_rules("sequence"))
         t_resume = round(time.perf_counter() - t0, 3)
         n_alerts2 = eng2.alerts.frame().count()
         results[k_seq][str(g)] = {
@@ -573,7 +571,7 @@ def main() -> None:
         ev.count()
         eng3 = Engine(spark, tempfile.mkdtemp(prefix=f"ab_pay_{epg}_"))
         t0 = time.perf_counter()
-        eng3.run_once(ev, _mk_rules("sequence"), fuse_sequences=True)
+        eng3.run_once(ev, _mk_rules("sequence"))
         dt = round(time.perf_counter() - t0, 3)
         doc_b, spill_b = _state_bytes(eng3)
         n_inf = eng3.inflight.frame().count()
