@@ -105,10 +105,11 @@ class Engine:
         faithful batched/per-document paths.
 
         ``eval_time`` (default: now) is the pass's one evaluation
-        instant: suppression windows, the F8 history bound, the start
+        instant: suppression windows, the F8 history bound, the
+        ``utctimestamp`` of threshold and deadman alerts, the start
         stamp (hence expiration) of new sequences and the expiry check
-        all read it, so a replay at a past or future instant behaves
-        as a pass run then."""
+        all read it, so a replay at a past or future instant behaves as
+        a pass run then."""
         # reliable-checkpoint misconfiguration must abort the PASS, not
         # drown in the per-rule scan swallows (where it would persist
         # zero alerts per tick, or read as a deadman's absence-of-
@@ -161,12 +162,11 @@ class Engine:
                 "suppressed rules this run: %s",
                 [r.get("alert_name") for r in suppressed],
             )
-        # new sequences start at this pass's instant (their expiration
-        # is start + lifespan), not at the wall clock of the call
+        # threshold/deadman alerts and new sequences are stamped with
+        # this pass's instant, not the wall clock of the call (a new
+        # sequence's expiration is start + lifespan)
         rules = [
-            dict(r, utctimestamp=now.isoformat())
-            if r.get("alert_type") == "sequence" and "utctimestamp" not in r
-            else r
+            r if "utctimestamp" in r else dict(r, utctimestamp=now.isoformat())
             for r in active
         ]
         seq = [r for r in rules if r.get("alert_type") == "sequence"]
@@ -330,7 +330,13 @@ class Engine:
         in-flight cardinality, and a pass with no in-flight store reads
         nothing. Documents whose slot shape isn't fusable fall back to
         the faithful batched/per-document paths (only those are ever
-        collected)."""
+        collected). A fallback group or document whose scan fails (a
+        slot criteria that does not parse) is logged and left in
+        flight unchanged, like a failing threshold rule — the rest of
+        the pass still runs."""
+        import logging
+
+        log = logging.getLogger(__name__)
         group_items, singles = resume_fused_frames(
             events_df, self.inflight, self.alerts,
             self.id_col, self.ts_col, spill_store=self.slot_events,
@@ -343,11 +349,22 @@ class Engine:
         captured: set[str] = set()
         pending: list[dict] = []
         for (_, idx), docs in group_items:
-            leftover = process_sequence_slot_batched(
-                events_df, docs, idx, self.inflight, self.alerts,
-                self.id_col, self.ts_col, spill_store=self.slot_events,
-                extra_alerted_ids=captured, collect_updates=pending,
-            )
+            # a failing group adds nothing to `pending` or `captured`
+            # (both are extended only after its scan has run)
+            try:
+                leftover = process_sequence_slot_batched(
+                    events_df, docs, idx, self.inflight, self.alerts,
+                    self.id_col, self.ts_col, spill_store=self.slot_events,
+                    extra_alerted_ids=captured, collect_updates=pending,
+                )
+            except ReliableCheckpointMisconfigured:
+                raise
+            except Exception:
+                log.exception(
+                    "sequence resume failed for rule %r slot %d",
+                    docs[0].get("alert_name"), idx,
+                )
+                continue
             singles.extend(docs if leftover is None else leftover)
         self.inflight.upsert_many(pending)
 
@@ -359,10 +376,17 @@ class Engine:
         pending_singles: list[dict] = []
         extras_memo: list = []  # per-pass: dies with this call frame
         for doc in singles:
-            process_sequence_alert(
-                events_df, doc, self.inflight, self.alerts,
-                self.id_col, self.ts_col, spill_store=self.slot_events,
-                collect_updates=pending_singles, extra_alerted_ids=captured,
-                extras_memo=extras_memo,
-            )
+            try:
+                process_sequence_alert(
+                    events_df, doc, self.inflight, self.alerts,
+                    self.id_col, self.ts_col, spill_store=self.slot_events,
+                    collect_updates=pending_singles,
+                    extra_alerted_ids=captured, extras_memo=extras_memo,
+                )
+            except ReliableCheckpointMisconfigured:
+                raise
+            except Exception:
+                log.exception(
+                    "sequence resume failed for rule %r", doc.get("alert_name")
+                )
         self.inflight.upsert_many(pending_singles)

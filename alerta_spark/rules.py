@@ -101,7 +101,7 @@ def threshold_shell(params: dict[str, Any]) -> dict[str, Any]:
     shell = {
         "alert_name": params.get("alert_name", "unnamed"),
         "alert_type": params.get("alert_type", "threshold"),
-        "utctimestamp": utcnow().isoformat(),
+        "utctimestamp": params.get("utctimestamp", utcnow().isoformat()),
         "severity": params.get("severity", "INFO"),
         "summary": params.get("summary", "threshold alert!"),
         "event_snippet": params.get("event_snippet", ""),
@@ -122,7 +122,7 @@ def deadman_shell(params: dict[str, Any]) -> dict[str, Any]:
     shell = {
         "alert_name": params.get("alert_name", "unnamed"),
         "alert_type": params.get("alert_type", "deadman"),
-        "utctimestamp": utcnow().isoformat(),
+        "utctimestamp": params.get("utctimestamp", utcnow().isoformat()),
         "severity": params.get("severity", "INFO"),
         "summary": params.get("summary", "deadman alert!"),
         "event_snippet": params.get("event_snippet", ""),

@@ -13,6 +13,13 @@ string partition predicates for the current + previous hour
 - `SELECT *` is replaced by column pruning: rules declare which
   columns they touch, Catalyst prunes the scan (fixes the reference's
   anti-optimization, SURVEY.md §4).
+
+:func:`load_table` takes a single-file table's Spark schema from its
+parquet footer, in the same one read that finds its TIMESTAMP(NANOS)
+columns, so loading a table launches no Spark job. Only inputs whose
+schema the footer cannot give as Spark would infer it (a Spark-written
+directory or file, an unsigned integer column) pay Spark's
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -22,29 +29,92 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# footer key under which Spark writes its own schema of a parquet file
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _nano_ts_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) (unsupported by the
-    Spark vectorized reader; read as long via
-    spark.sql.legacy.parquet.nanosAsLong and converted here)."""
+def _pinnable(t, top: bool) -> bool:
+    """False for the arrow types that ``from_arrow_type`` maps apart
+    from Spark's own parquet inference: duration (Spark: long), time
+    (Spark: unsupported), null (Spark: int), and a nested
+    TIMESTAMP(NANOS) (Spark: long, but only top-level columns are
+    converted here)."""
+    import pyarrow.types as pat
+
+    if pat.is_struct(t):
+        return all(_pinnable(f.type, False) for f in t)
+    if pat.is_list(t) or pat.is_large_list(t) or pat.is_fixed_size_list(t):
+        return _pinnable(t.value_type, False)
+    if pat.is_map(t):
+        return _pinnable(t.key_type, False) and _pinnable(t.item_type, False)
+    if pat.is_dictionary(t):
+        return _pinnable(t.value_type, False)
+    if pat.is_timestamp(t):
+        return top or t.unit != "ns"
+    return not (pat.is_duration(t) or pat.is_time(t) or pat.is_null(t))
+
+
+def _read_footer(path: str) -> tuple[StructType | None, list[str]]:
+    """One read of a single-file table's parquet footer: the Spark
+    schema Spark's own inference would give (with
+    spark.sql.legacy.parquet.nanosAsLong), and the top-level
+    TIMESTAMP(NANOS) columns, which that schema reads as long.
+
+    The schema is None where it must be inferred by Spark: a path
+    pyarrow cannot read as one file (a Spark-written directory), a
+    Spark-written file (Spark takes its schema from its own footer
+    key, and writes INT96 timestamps, which pyarrow reports as
+    nanoseconds), or a type outside :func:`_pinnable` or
+    ``from_arrow_type`` (unsigned integers, float16)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     try:
-        import pyarrow.parquet as pq
+        meta = pq.read_metadata(path)
+        arrow = meta.schema.to_arrow_schema()
+    except (OSError, pa.ArrowException):
+        return None, []
+    int96 = {
+        meta.schema.column(i).path
+        for i in range(meta.num_columns)
+        if meta.schema.column(i).physical_type == "INT96"
+    }
+    nanos = [
+        f.name
+        for f in arrow
+        if pa.types.is_timestamp(f.type)
+        and f.type.unit == "ns"
+        and f.name not in int96
+    ]
+    if (
+        int96
+        or _SPARK_SCHEMA_KEY in (meta.metadata or {})
+        or not all(_pinnable(f.type, True) for f in arrow)
+    ):
+        return None, nanos
+    try:
+        spark_schema = from_arrow_schema(
+            pa.schema(
+                pa.field(f.name, pa.int64() if f.name in nanos else f.type)
+                for f in arrow
+            ),
+            prefer_timestamp_ntz=True,
+        )
+    except TypeError:  # PySparkTypeError: no Spark type for it
+        return None, nanos
+    # Spark's file sources read every top-level field as nullable
+    return (
+        StructType([StructField(f.name, f.dataType, True) for f in spark_schema]),
+        nanos,
+    )
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if str(f.type).startswith("timestamp[ns")
-        ]
-    except Exception:
-        return []
 
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    df = spark.read.parquet(path)
-    for c in _nano_ts_columns(path):
+def _post_read(df: DataFrame, nanos: list[str]) -> DataFrame:
+    """The conversions every load applies to the raw parquet columns."""
+    for c in nanos:
         # integer div keeps full precision; truncation toward zero
         # matches DuckDB's ns->us coercion
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
@@ -59,19 +129,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a frame whose timestamps are all
+    TIMESTAMP (see :func:`_post_read`)."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema, nanos = _read_footer(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return _post_read(reader.parquet(path), nanos)
+
+
 def load_table_stream(
     spark: SparkSession, sf_dir: str, name: str
 ) -> DataFrame:
     """Streaming twin of :func:`load_table`: readStream with the RAW
-    parquet schema, then the SAME post-conversions. Feeding the
-    stream the batch frame's POST-conversion schema (what cli.py used
-    to do) breaks on any TIMESTAMP(NANOS) column — the physical
-    int64-nanos column cannot be read with a requested TimestampType,
-    and even where readable the ns->us conversion would silently
-    never run on stream rows."""
+    parquet schema (from the footer, or inferred by a batch read where
+    :func:`_read_footer` gives none), then the SAME post-conversions.
+    Feeding the stream the batch frame's POST-conversion schema breaks
+    on any TIMESTAMP(NANOS) column — the physical int64-nanos column
+    cannot be read with a requested TimestampType, and even where
+    readable the ns->us conversion would silently never run on stream
+    rows."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    raw_schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(raw_schema)
+    schema, nanos = _read_footer(path)
+    if schema is None:
+        schema = spark.read.parquet(path).schema
+    reader = spark.readStream.schema(schema)
     if os.path.isfile(path):
         # the file stream source requires a DIRECTORY; a single-file
         # table (the testdata layout) streams from its parent with a
@@ -80,12 +162,7 @@ def load_table_stream(
         df = reader.parquet(os.path.dirname(path))
     else:
         df = reader.parquet(path)
-    for c in _nano_ts_columns(path):
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for f in df.schema.fields:
-        if f.dataType.typeName() == "timestamp_ntz":
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    return df
+    return _post_read(df, nanos)
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,6 +73,38 @@ def events(spark):
 
 
 @pytest.fixture()
+def nano_lake(tmp_path):
+    """A one-table lake whose ``events.ts`` is parquet TIMESTAMP(NANOS),
+    with two pre-1970 values where truncation toward zero and flooring
+    give different microseconds. Returns the lake directory and
+    ``{event_id: ts in epoch microseconds}`` as DuckDB reads the file."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "events.parquet"
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(
+                [-1_500, -86_400_000_000_999, 1_700_000_000_123_456_789],
+                pa.timestamp("ns"),
+            ),
+            "event_type": ["a", "b", "c"],
+        }
+    )
+    pq.write_table(table, path)
+    assert pq.read_schema(path).field("ts").type == pa.timestamp("ns")
+    want = dict(
+        duckdb.sql(
+            f"SELECT event_id, epoch_us(ts::TIMESTAMP) FROM '{path}'"
+        ).fetchall()
+    )
+    assert want == {1: -1, 2: -86_400_000_000, 3: 1_700_000_000_123_456}
+    return str(tmp_path), want
+
+
+@pytest.fixture()
 def cloudtrail_events(spark):
     """Golden fixture shaped like the reference's cloudtrail sample
     (tests/samples/sample_cloudtrail_login_no_mfa.json): two root

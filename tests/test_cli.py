@@ -27,18 +27,23 @@ def test_stream_mode_requires_checkpoint_key(tmp_path):
         run_from_config(cfg, stream=True)
 
 
-def test_load_table_stream_converts_nano_timestamps(spark):
-    """The streaming source must read the RAW parquet schema and apply
-    load_table's ns->long->timestamp conversion — feeding it the batch
-    frame's POST-conversion schema failed on TIMESTAMP(NANOS) columns
-    (physical int64 read with a requested TimestampType)."""
+def test_load_table_stream_converts_nano_timestamps(spark, nano_lake):
+    """The streaming source reads the RAW parquet schema and applies
+    load_table's ns->long->timestamp conversion: a TIMESTAMP(NANOS)
+    column streams as a true timestamp truncated toward zero, equal to
+    the batch load and to DuckDB. Feeding the stream the batch frame's
+    POST-conversion schema failed on such columns (physical int64 read
+    with a requested TimestampType)."""
     import tempfile
     import time
 
+    from pyspark.sql import functions as F
+
     from alerta_spark.sources.lake import load_table, load_table_stream
 
-    batch = load_table(spark, SF_DIR, "events")
-    stream = load_table_stream(spark, SF_DIR, "events")
+    lake_dir, want = nano_lake
+    batch = load_table(spark, lake_dir, "events")
+    stream = load_table_stream(spark, lake_dir, "events")
     assert stream.isStreaming
     # post-conversion schemas agree (ts is a real timestamp)
     assert dict(stream.dtypes)["ts"] == dict(batch.dtypes)["ts"] == "timestamp"
@@ -46,8 +51,8 @@ def test_load_table_stream_converts_nano_timestamps(spark):
     seen = {}
 
     def _batch(df, _bid):
-        seen["rows"] = df.count()
         seen["ts_type"] = dict(df.dtypes)["ts"]
+        seen["micros"] = dict(df.select("event_id", F.unix_micros("ts")).collect())
 
     ck = tempfile.mkdtemp(prefix="cli_stream_ck_")
     q = (
@@ -59,5 +64,6 @@ def test_load_table_stream_converts_nano_timestamps(spark):
     deadline = time.time() + 120
     while q.isActive and time.time() < deadline:
         q.awaitTermination(2)
-    assert seen.get("rows", 0) == batch.count()
     assert seen.get("ts_type") == "timestamp"
+    assert seen.get("micros") == want
+    assert dict(batch.select("event_id", F.unix_micros("ts")).collect()) == want

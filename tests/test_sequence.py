@@ -210,6 +210,81 @@ def test_sequence_expiry_honours_eval_time(spark, engine):
     assert engine.alerts.docs() == []
 
 
+@pytest.mark.parametrize(
+    "slot1",
+    [
+        "((( not sql",  # per-document fallback
+        # templated equality: the batched fallback, broken static part
+        "((( not sql AND json_extract_scalar(details,'$.user_name')="
+        "'{{slots.0.events.0.details.user_name}}'",
+    ],
+    ids=["document", "group"],
+)
+def test_broken_resume_slot_is_isolated(spark, engine, slot1):
+    """A sequence whose later slot criteria does not parse is logged
+    and left in flight unchanged on every pass; the threshold rule of
+    the same pass still writes its alert."""
+    from pyspark.sql import functions as F
+
+    seq = json.loads(json.dumps(SEQ_RULE))
+    seq["slots"][1]["criteria"] = slot1
+    thr = {
+        "alert_name": "onelogin_by_user",
+        "alert_type": "threshold",
+        "criteria": "source='onelogin'",
+        "aggregation_key": "details.user_name",
+        "threshold": 1,
+    }
+    engine.run_once(_onelogin_events(spark, [RISKY]), [seq, thr])
+    waiting = engine.inflight.docs()
+    assert len(waiting) == 1 and first_unfilled_slot(waiting[0])[0] == 1
+
+    ev2 = _onelogin_events(spark, [RISKY]).withColumn(
+        "event_id", F.col("event_id") + 100
+    )
+    engine.run_once(ev2, [seq, thr])
+    fired = sorted(
+        e["event_id"]
+        for a in engine.alerts.docs()
+        if a["alert_name"] == "onelogin_by_user"
+        for e in a["events"]
+    )
+    assert fired == [0, 100]
+    # event 100 also starts a second sequence; the first one waits on
+    # slot 1 exactly as it did
+    after = engine.inflight.docs()
+    assert waiting[0] in after
+    assert all(first_unfilled_slot(d)[0] == 1 for d in after)
+
+
+def test_threshold_and_deadman_stamped_with_eval_time(spark, engine):
+    """Threshold and deadman alerts written by a pass carry the pass's
+    ``eval_time`` as ``utctimestamp``, not the wall clock."""
+    from datetime import datetime, timezone
+
+    t = datetime(2025, 6, 1, 12, 0, tzinfo=timezone.utc)
+    rules = [
+        {
+            "alert_name": "onelogin_by_user",
+            "alert_type": "threshold",
+            "criteria": "source='onelogin'",
+            "aggregation_key": "details.user_name",
+            "threshold": 1,
+        },
+        {
+            "alert_name": "no_okta",
+            "alert_type": "deadman",
+            "criteria": "source='okta'",
+        },
+    ]
+    engine.run_once(_onelogin_events(spark, [RISKY]), rules, eval_time=t)
+    alerts = engine.alerts.docs()
+    assert sorted(a["alert_name"] for a in alerts) == [
+        "no_okta", "onelogin_by_user",
+    ]
+    assert {a["utctimestamp"] for a in alerts} == {t.isoformat()}
+
+
 def test_compile_templated_criteria_reference_shapes():
     from alerta_spark.operators.sequence import compile_templated_criteria
 

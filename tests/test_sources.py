@@ -1,7 +1,12 @@
 """Source-layer parity: S5 (concatenated-JSON splitting via the native
-reader) and nano-timestamp conversion."""
+reader), nano-timestamp conversion, and table loads whose schema comes
+from the parquet footer."""
 
+import glob
 import json
+import os
+
+SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_json_blob_splitting(spark, tmp_path):
@@ -28,22 +33,108 @@ def test_json_blob_splitting(spark, tmp_path):
     assert len(split_json_blocks(tricky)) == 2
 
 
-def test_nano_timestamp_conversion(spark):
-    """Testdata parquet carries TIMESTAMP(NANOS): the source layer must
-    deliver true timestamps with microsecond truncation (DuckDB-equal)."""
-    from alerta_spark.sources.lake import load_events
-
-    df = load_events(spark, "/root/testdata/sf0.001")
-    assert df.schema["ts"].dataType.simpleString() == "timestamp"
+def test_nano_timestamp_conversion(spark, nano_lake):
+    """A parquet TIMESTAMP(NANOS) column loads as a true timestamp,
+    truncated toward zero to microseconds as DuckDB reads it (pre-1970
+    values included). The test lake's own timestamps are microsecond
+    (naive) ones: they load as timestamp and agree with DuckDB too."""
     import duckdb
-
-    expect = duckdb.sql(
-        "SELECT max(ts) FROM '/root/testdata/sf0.001/events.parquet'"
-    ).fetchone()[0]
     from pyspark.sql import functions as F
 
-    got = df.select(F.max("ts")).first()[0]
-    assert got == expect
+    from alerta_spark.sources.lake import load_events, load_table
+
+    lake_dir, want = nano_lake
+    df = load_table(spark, lake_dir, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = dict(df.select("event_id", F.unix_micros("ts")).collect())
+    assert got == want
+
+    df = load_events(spark, SF_DIR)
+    assert df.schema["ts"].dataType.simpleString() == "timestamp"
+    expect = duckdb.sql(
+        f"SELECT max(ts) FROM '{SF_DIR}/events.parquet'"
+    ).fetchone()[0]
+    assert df.select(F.max("ts")).first()[0] == expect
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under its own Spark job group; return the number of
+    jobs that group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_runs_no_spark_job(spark):
+    """A single-file table's schema comes from its parquet footer, so
+    loading it launches no Spark job (schema inference launches one)."""
+    from alerta_spark.sources.lake import load_table
+
+    path = f"{SF_DIR}/events.parquet"
+    assert _jobs_in_group(
+        spark, "infer-events", lambda: spark.read.parquet(path).schema
+    ) >= 1
+    assert _jobs_in_group(
+        spark, "load-events", lambda: load_table(spark, SF_DIR, "events").schema
+    ) == 0
+
+
+def test_load_table_schema_matches_inference(spark):
+    """For every test-lake table, the footer-derived schema gives the
+    schema Spark's own inference gives after the same conversions."""
+    from alerta_spark.sources.lake import _post_read, _read_footer, load_table
+
+    paths = sorted(glob.glob(f"{SF_DIR}/*.parquet"))
+    assert len(paths) == 10
+    for path in paths:
+        name = os.path.basename(path)[: -len(".parquet")]
+        schema, nanos = _read_footer(path)
+        assert schema is not None, name
+        inferred = _post_read(spark.read.parquet(path), nanos).schema
+        assert load_table(spark, SF_DIR, name).schema == inferred, name
+
+
+def test_load_table_falls_back_to_inference(spark, tmp_path):
+    """Inputs whose schema the footer cannot give take Spark's
+    inference and load as before: a Spark-written directory table, a
+    single Spark-written file (INT96 timestamps, which pyarrow reports
+    as nanoseconds) and an unsigned-integer file."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from alerta_spark.sources.lake import _read_footer, load_table
+
+    src = spark.sql(
+        "SELECT id AS event_id, "
+        "timestamp_seconds(1700000000 + id) AS ts FROM range(3)"
+    )
+    src.coalesce(1).write.parquet(str(tmp_path / "spark_dir.parquet"))
+    part = glob.glob(str(tmp_path / "spark_dir.parquet" / "*.parquet"))[0]
+    shutil.copy(part, tmp_path / "spark_file.parquet")
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                  "u": pa.array([7, 255], pa.uint8())}),
+        tmp_path / "unsigned.parquet",
+    )
+    want_ts = sorted(r[0] for r in src.select("ts").collect())
+    for name in ("spark_dir", "spark_file"):
+        assert _read_footer(str(tmp_path / f"{name}.parquet")) == (None, [])
+        df = load_table(spark, str(tmp_path), name)
+        assert dict(df.dtypes) == {"event_id": "bigint", "ts": "timestamp"}
+        assert sorted(r[0] for r in df.select("ts").collect()) == want_ts
+
+    assert _read_footer(str(tmp_path / "unsigned.parquet"))[0] is None
+    df = load_table(spark, str(tmp_path), "unsigned")
+    assert dict(df.dtypes)["u"] == "smallint"
+    assert sorted(r[0] for r in df.select(F.col("u")).collect()) == [7, 255]
 
 
 def test_schema_evolution_read_merges_new_columns(spark, tmp_path, events):
