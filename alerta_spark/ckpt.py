@@ -2,12 +2,16 @@
 
 Engine passes truncate lineage on small fired/state frames before
 store writes (scan errors must surface inside the per-rule swallow,
-store errors outside it — see engine.run_once). ``localCheckpoint``
-is the right default: executor-local blocks, no configuration, same
-cost class as a persist. Its documented hazard is cluster-only —
-blocks are UNREPLICATED, so losing an executor between the checkpoint
-and the store write fails the pass (recoverable: the next cron tick
-replays, and F8 dedup makes the replay idempotent).
+store errors outside it — see engine.run_once). :func:`materialize`
+is the form every store write uses: ONE eager checkpoint job that
+also counts the rows (an ``Observation`` on the checkpointed plan),
+so the write's emptiness decision costs no further job.
+
+``localCheckpoint`` is the right default: executor-local blocks, no
+configuration, same cost class as a persist. Its documented hazard is
+cluster-only — blocks are UNREPLICATED, so losing an executor between
+the checkpoint and the store write fails the pass (recoverable: the
+next cron tick replays, and F8 dedup makes the replay idempotent).
 
 Deployments that cannot tolerate a failed pass opt into RELIABLE
 checkpointing with two standard Spark knobs::
@@ -43,7 +47,8 @@ when the cleaner conf is off.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 RELIABLE_CONF = "spark.alerta.reliableCheckpoint"
 CLEANER_CONF = "spark.cleaner.referenceTracking.cleanCheckpoints"
@@ -113,3 +118,14 @@ def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
             )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """Eagerly :func:`checkpoint` ``df`` and return it with its row
+    count. The count is an observed metric of the checkpoint job
+    itself, so it adds no job — callers skip a write on 0 instead of
+    running ``isEmpty()`` as a second job. Errors in ``df``'s plan
+    raise here, from the checkpoint."""
+    obs = Observation()
+    out = checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")), eager=True)
+    return out, obs.get["n"]

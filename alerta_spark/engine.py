@@ -14,13 +14,13 @@ trigger.
 from __future__ import annotations
 
 import os
-from datetime import timezone
+from datetime import datetime, timezone
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from alerta_spark.ckpt import ReliableCheckpointMisconfigured, checkpoint
+from alerta_spark.ckpt import ReliableCheckpointMisconfigured, materialize
 from alerta_spark.ckpt import validate as ckpt_validate
 from alerta_spark.operators.deadman import deadman_alerts
 from alerta_spark.operators.sequence import (
@@ -35,7 +35,7 @@ from alerta_spark.operators.sequence_frames import (
 )
 from alerta_spark.operators.threshold import threshold_alerts
 from alerta_spark.rules import parse_timedelta
-from alerta_spark.state import DocStore, SlotEventStore
+from alerta_spark.state import DocStore, SlotEventStore, alert_docs_frame
 
 
 class Engine:
@@ -92,7 +92,8 @@ class Engine:
         (the reference loop's shape): every rule's scan is isolated, so
         a runtime scan failure is swallowed for that rule alone — a
         threshold rule fires nothing, a deadman rule fires (absence of
-        evidence is the alarm, alerta.py:417-420).
+        evidence is the alarm, alerta.py:417-420). Each such rule logs
+        one INFO line with the number of alert documents it emitted.
         Sequence rules run on the frame-native tier
         (operators/sequence_frames.py) on both phases of the pass: the
         in-flight resume (`resume_fused_frames`) and the fresh starts
@@ -106,10 +107,10 @@ class Engine:
 
         ``eval_time`` (default: now) is the pass's one evaluation
         instant: suppression windows, the F8 history bound, the
-        ``utctimestamp`` of threshold and deadman alerts, the start
-        stamp (hence expiration) of new sequences and the expiry check
-        all read it, so a replay at a past or future instant behaves as
-        a pass run then."""
+        ``utctimestamp`` of threshold and deadman alerts and of fired
+        sequence slots, the start stamp (hence expiration) of new
+        sequences and the expiry check all read it, so a replay at a
+        past or future instant behaves as a pass run then."""
         # reliable-checkpoint misconfiguration must abort the PASS, not
         # drown in the per-rule scan swallows (where it would persist
         # zero alerts per tick, or read as a deadman's absence-of-
@@ -129,7 +130,7 @@ class Engine:
             self.alerts.dedup_min_epoch = (
                 int(now.timestamp()) - self._dedup_history_s
             )
-        self._resume_inflight(events_df)
+        self._resume_inflight(events_df, now)
         # maintenance windows: a rule whose `suppress` interval covers
         # this evaluation instant is skipped whole — including deadman
         # rules (a maintenance window is precisely when absence is
@@ -181,6 +182,7 @@ class Engine:
                 for r in starts_fused_frames(
                     events_df, seq, self.inflight, self.alerts,
                     self.id_col, self.ts_col, spill_store=self.slot_events,
+                    now=now,
                 )
             }
             rules = [
@@ -199,14 +201,21 @@ class Engine:
                     rule.get("alert_name"),
                     kind,
                 )
+            if kind == "sequence":
+                process_sequence_alert(
+                    events_df, rule, self.inflight, self.alerts,
+                    self.id_col, self.ts_col, spill_store=self.slot_events,
+                    now=now,
+                )
+                continue
             if kind == "threshold":
                 # reference swallows scan failures here too
                 # (alerta.py:470-473): a broken criteria logs and yields
                 # no events -> no alert, the run continues. Emission is
-                # DISTRIBUTED (append_frame): fired-group cardinality
-                # grows with the corpus, so alert documents are
-                # assembled and written executor-side — the driver
-                # never materializes an alert row.
+                # DISTRIBUTED: fired-group cardinality grows with the
+                # corpus, so alert documents are assembled and written
+                # executor-side — the driver never materializes an
+                # alert row.
                 try:
                     fired = threshold_alerts(
                         events_df,
@@ -215,11 +224,14 @@ class Engine:
                         id_col=self.id_col,
                         ts_col=self.ts_col,
                     )
-                    # surface lazy SCAN errors here, inside the swallow
-                    # (the eager checkpoint executes the tiny fired
-                    # frame) — so the store write below sits OUTSIDE
-                    # it and a failing store still propagates instead
-                    # of silently dropping alerts.
+                    # ONE job builds the rule's alert documents: it
+                    # surfaces lazy SCAN and document-assembly errors
+                    # here, inside the swallow, freezes the per-row
+                    # uuid ids, and counts the documents — so the store
+                    # write below sits OUTSIDE the swallow (a failing
+                    # store propagates instead of silently dropping
+                    # alerts) and a rule that fired nothing writes
+                    # nothing, with no further job.
                     # NOTE the default localCheckpoint stores
                     # UNREPLICATED executor-local blocks: on a
                     # multi-executor cluster, losing an executor
@@ -231,18 +243,14 @@ class Engine:
                     # checkpoint dir and every alerting-tier
                     # truncation (this one included) persists to
                     # fault-tolerant storage instead — see ckpt.py.
-                    fired = checkpoint(fired, eager=True)
+                    docs, n = materialize(alert_docs_frame(fired, self.id_col))
                 except ReliableCheckpointMisconfigured:
                     raise  # config error, not a broken criteria
                 except Exception:
-                    import logging
-
-                    logging.getLogger(__name__).exception(
+                    log.exception(
                         "threshold scan failed for rule %r", rule.get("alert_name")
                     )
-                    fired = None
-                if fired is not None:
-                    self.alerts.append_frame(fired, id_field=self.id_col)
+                    continue
             elif kind == "deadman":
                 # reference failure semantics (alerta.py:417-420): a scan
                 # exception is swallowed and leaves events empty, so a
@@ -252,7 +260,8 @@ class Engine:
                     fired = deadman_alerts(
                         events_df, rule, id_col=self.id_col, ts_col=self.ts_col
                     )
-                    fired = checkpoint(fired, eager=True)  # scan errors surface HERE
+                    # scan errors surface HERE, in the one job
+                    docs, n = materialize(alert_docs_frame(fired, self.id_col))
                 except ReliableCheckpointMisconfigured:
                     raise  # config error — must NOT read as absence
                 except Exception:
@@ -261,16 +270,15 @@ class Engine:
                         empty, dict(rule, criteria=""), id_col=self.id_col,
                         ts_col=self.ts_col,
                     )
-                # the store write stays OUTSIDE the scan-failure swallow:
-                # a transient store error must propagate, not be
-                # misread as "absence of evidence" (which would emit a
-                # FALSE deadman alert on the fallback path)
-                self.alerts.append_frame(fired, id_field=self.id_col)
-            elif kind == "sequence":
-                process_sequence_alert(
-                    events_df, rule, self.inflight, self.alerts,
-                    self.id_col, self.ts_col, spill_store=self.slot_events,
-                )
+                    docs, n = materialize(alert_docs_frame(fired, self.id_col))
+            else:
+                continue
+            log.info("rule %s (%s): %d alerts", rule.get("alert_name"), kind, n)
+            # the store write stays OUTSIDE the scan-failure swallows:
+            # a transient store error must propagate, not drop a
+            # threshold's alerts or read as a deadman's "absence of
+            # evidence" (a FALSE alert on the fallback path)
+            self.alerts.append_rows(docs, n)
 
         # completion + expiry share one state read/overwrite; spill
         # pruning is deferred to the compaction cadence below (a prune
@@ -320,7 +328,7 @@ class Engine:
             .start()
         )
 
-    def _resume_inflight(self, events_df: DataFrame) -> None:
+    def _resume_inflight(self, events_df: DataFrame, now: datetime) -> None:
         """Resume in-flight sequences (alerta.py:491, 210-215).
 
         ALL fusable (rule, slot) groups share one conditional-aggregate
@@ -333,13 +341,14 @@ class Engine:
         collected). A fallback group or document whose scan fails (a
         slot criteria that does not parse) is logged and left in
         flight unchanged, like a failing threshold rule — the rest of
-        the pass still runs."""
+        the pass still runs. Slots fired here are stamped with the
+        pass's instant ``now``."""
         import logging
 
         log = logging.getLogger(__name__)
         group_items, singles = resume_fused_frames(
             events_df, self.inflight, self.alerts,
-            self.id_col, self.ts_col, spill_store=self.slot_events,
+            self.id_col, self.ts_col, spill_store=self.slot_events, now=now,
         )
 
         # deferred-upsert form: every batched group's updates land in
@@ -356,6 +365,7 @@ class Engine:
                     events_df, docs, idx, self.inflight, self.alerts,
                     self.id_col, self.ts_col, spill_store=self.slot_events,
                     extra_alerted_ids=captured, collect_updates=pending,
+                    now=now,
                 )
             except ReliableCheckpointMisconfigured:
                 raise
@@ -382,6 +392,7 @@ class Engine:
                     self.id_col, self.ts_col, spill_store=self.slot_events,
                     collect_updates=pending_singles,
                     extra_alerted_ids=captured, extras_memo=extras_memo,
+                    now=now,
                 )
             except ReliableCheckpointMisconfigured:
                 raise

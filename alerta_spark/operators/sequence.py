@@ -53,6 +53,7 @@ from alerta_spark.rules import (
     generate_meteor_id,
     sequence_shell,
     threshold_shell,
+    utcnow,
 )
 from alerta_spark.state import DocStore, SlotEventStore
 from alerta_spark.templates import render_py, template_vars
@@ -227,6 +228,7 @@ def process_sequence_alert(
     collect_updates: list[dict[str, Any]] | None = None,
     extra_alerted_ids: set[str] | None = None,
     extras_memo: list | None = None,
+    now: datetime | None = None,
 ) -> None:
     """Advance one in-flight (or fresh) sequence alert by at most one
     slot (reference: alerta.py:274-317).
@@ -247,7 +249,10 @@ def process_sequence_alert(
     history probe sees earlier documents' captures from THIS pass,
     which the self-upserting form gets from re-reading the store) is
     replayed through ``extra_alerted_ids``: captured ids accumulate in
-    the caller's set and union into this document's dedup anti-join."""
+    the caller's set and union into this document's dedup anti-join.
+
+    A fired slot is stamped with ``now`` (the engine's pass instant;
+    default: the wall clock)."""
     doc = sequence_shell(doc)
     index, slot = first_unfilled_slot(doc)
     if slot is None:
@@ -256,7 +261,8 @@ def process_sequence_alert(
     # cross-slot templating: values captured by earlier slots become
     # literals in this slot's criteria (alerta.py:291)
     criteria = render_py(str(slot.get("criteria", "")), doc)
-    params = dict(slot, criteria=criteria)
+    stamp = (now or utcnow()).isoformat()
+    params = dict(slot, criteria=criteria, utctimestamp=stamp)
 
     fired = None
     p: dict[str, Any] | None = None
@@ -550,6 +556,7 @@ def process_sequence_slot_batched(
     spill_store: SlotEventStore | None = None,
     extra_alerted_ids: set[str] | None = None,
     collect_updates: list[dict[str, Any]] | None = None,
+    now: datetime | None = None,
 ) -> list[dict[str, Any]] | None:
     """Advance MANY in-flight alerts waiting on the same slot with ONE
     Spark job: the templated equality becomes a semi-join of the slot
@@ -569,7 +576,8 @@ def process_sequence_slot_batched(
     not re-capture events an earlier group captured THIS pass, which
     the self-upserting form gets from re-reading the store) is
     replayed through ``extra_alerted_ids``: captured ids accumulate in
-    the caller's set and AND into this group's dedup anti-join."""
+    the caller's set and AND into this group's dedup anti-join. Fired
+    slots are stamped with ``now`` (default: the wall clock)."""
     from pyspark.sql import functions as F
 
     from alerta_spark.paths import path_col
@@ -632,7 +640,9 @@ def process_sequence_slot_batched(
             "alerted_event_id string",
         )
         dedup_ids = dedup_ids.unionByName(extra)
-    p = threshold_shell(dict(slot, criteria=static))
+    p = threshold_shell(
+        dict(slot, criteria=static, utctimestamp=(now or utcnow()).isoformat())
+    )
     fired = threshold_alerts(
         candidates, p, alerted_ids=dedup_ids, id_col=id_col, ts_col=ts_col
     )

@@ -529,6 +529,7 @@ def resume_fused_frames(
     id_col: str = "event_id",
     ts_col: str = "ts",
     spill_store: SlotEventStore | None = None,
+    now: datetime | None = None,
 ) -> tuple[list[tuple[tuple[str, int], list[dict]]], list[dict]]:
     """Advance every fusable in-flight (rule, slot) group with ONE
     events scan and ZERO per-document driver materialization — the
@@ -541,7 +542,8 @@ def resume_fused_frames(
     mechanism the starts pass uses), never as driver sets.
     The captured-value probe is a broadcast semi-join inside the
     shared scan, so group size has no plan-size cap (the driver
-    ``ISIN_PROBE_MAX`` detour does not exist here)."""
+    ``ISIN_PROBE_MAX`` detour does not exist here). Fired slots are
+    stamped with ``now`` (default: the wall clock)."""
     from alerta_spark.dialect import trino_to_spark
     from alerta_spark.operators.dedup import (
         alerted_event_ids,
@@ -553,6 +555,7 @@ def resume_fused_frames(
     spark = events_df.sparkSession
     if not inflight_store._exists():
         return [], []
+    stamp = (now or utcnow()).isoformat()
     routed = route_inflight(inflight_store.frame())
     resumable = routed.where(F.col("next_idx") >= 0).persist()
     try:
@@ -612,10 +615,8 @@ def resume_fused_frames(
                     unfused_meta.append((int(r["max_epoch"]), name, idx))
                     continue
             try:
-                if a_type == "deadman":
-                    p_asm = deadman_shell(dict(slot, criteria=static))
-                else:
-                    p_asm = threshold_shell(dict(slot, criteria=static))
+                shell = deadman_shell if a_type == "deadman" else threshold_shell
+                p_asm = shell(dict(slot, criteria=static, utctimestamp=stamp))
                 if static:
                     # plan-time parse + resolve check; no job runs
                     events_df.where(F.expr(trino_to_spark(static))).schema
@@ -897,13 +898,15 @@ def starts_fused_frames(
     id_col: str = "event_id",
     ts_col: str = "ts",
     spill_store: SlotEventStore | None = None,
+    now: datetime | None = None,
 ) -> list[dict[str, Any]]:
     """Start N fresh sequence rules with ONE events scan AND zero
     per-group driver materialization; returns the rules it could not
     fuse, for the caller's per-rule loop. Each fired group spawns its
     in-flight document inside an Arrow UDF from the rule's
     (driver-computed, constant) shell; fresh documents append to the
-    state table executor-side."""
+    state table executor-side. Fired slot-0 documents are stamped with
+    ``now`` (default: the wall clock)."""
     from alerta_spark.dialect import trino_to_spark
     from alerta_spark.operators.dedup import (
         alerted_event_ids,
@@ -914,6 +917,7 @@ def starts_fused_frames(
     from alerta_spark.paths import path_col
     from alerta_spark.templates import template_vars
 
+    stamp = (now or utcnow()).isoformat()
     fusable: list[tuple[dict, int, dict]] = []
     leftover: list[dict] = []
     for rule in rules:
@@ -934,7 +938,7 @@ def starts_fused_frames(
             leftover.append(rule)
             continue
         try:
-            p = threshold_shell(dict(slot))
+            p = threshold_shell(dict(slot, utctimestamp=stamp))
             if p["criteria"]:
                 # plan-time parse + resolve check; no job runs
                 events_df.where(F.expr(trino_to_spark(p["criteria"]))).schema

@@ -72,7 +72,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from alerta_spark.ckpt import checkpoint
+from alerta_spark.ckpt import checkpoint, materialize
 from alerta_spark.rules import generate_meteor_id, utcnow
 
 DOC_SCHEMA = T.StructType(
@@ -496,40 +496,40 @@ class DocStore:
         driver memory. Parquet's job-commit protocol keeps the append
         atomic per call.
 
-        Zero-row frames skip the write entirely: every non-firing rule
-        in every engine pass would otherwise add an empty part file
-        that the F8 probe re-lists forever. The frame is checkpointed
-        first (fired frames are tiny, post-aggregation) so the
-        emptiness probe and the write share one computation — and the
-        per-row uuid ids are frozen before any action reads them."""
-        docs = checkpoint(alert_docs_frame(alerts, id_field), eager=True)
-        if docs.isEmpty():
+        The documents are materialized once (``ckpt.materialize``:
+        fired frames are tiny, post-aggregation), which freezes the
+        per-row uuid ids and counts the rows in the same job; the
+        write then follows :meth:`append_rows`."""
+        self.append_rows(*materialize(alert_docs_frame(alerts, id_field)))
+
+    def append_rows(self, rows: DataFrame, count: int | None = None) -> None:
+        """Append an already-assembled DOC_SCHEMA frame executor-side
+        (the completed-sequence emission path builds its rows inside an
+        Arrow UDF; they must reach parquet without a driver hop).
+
+        ``count`` is the row count ``ckpt.materialize`` returned for
+        ``rows`` when the caller materialized them already (the
+        engine, whose per-rule swallow must see the assembly job);
+        otherwise the rows are materialized here. Zero rows skip the
+        write entirely: every non-firing rule in every engine pass
+        would otherwise add an empty part file that the F8 probe
+        re-lists forever."""
+        rows = rows.select([f.name for f in DOC_SCHEMA.fields])
+        if count is None:
+            rows, count = materialize(rows)
+        if not count:
             return
-        # coalesce the bounded batch to ONE file: the checkpointed
+        # coalesce the bounded batch to ONE file: the materialized
         # frame inherits the threshold aggregate's full shuffle width,
         # so a bare append emits one near-empty part file per task —
         # ~width files per engine pass that the F8 probe and every
         # readback re-list (small-files tax, twice). One post-
         # checkpoint read task funnels only the fired rows (tiny,
         # post-aggregation — overwrite_frame's num_files=1 argument);
-        # assembly and the emptiness probe keep their parallelism, and
-        # the append-atomic commit + zero-row skip are untouched.
-        # compact() remains the remedy for multi-pass accumulation.
-        docs.coalesce(1).write.mode("append").parquet(
-            _append_dir(self.path)
-        )
-
-    def append_rows(self, rows: DataFrame) -> None:
-        """Append an already-assembled DOC_SCHEMA frame executor-side
-        (the completed-sequence emission path builds its rows inside an
-        Arrow UDF; they must reach parquet without a driver hop)."""
-        out = checkpoint(
-            rows.select([f.name for f in DOC_SCHEMA.fields]), eager=True
-        )
-        if out.isEmpty():
-            return
-        # same one-file append as append_frame (bounded emission batch)
-        out.coalesce(1).write.mode("append").parquet(
+        # assembly keeps its parallelism, and the append-atomic commit
+        # + zero-row skip are untouched. compact() remains the remedy
+        # for multi-pass accumulation.
+        rows.coalesce(1).write.mode("append").parquet(
             _append_dir(self.path)
         )
 
@@ -588,15 +588,15 @@ class DocStore:
         already-assembled DOC_SCHEMA frame (the frame-native sequence
         tier builds its updated in-flight documents inside Arrow UDFs —
         they must reach the table without a driver hop). The frame is
-        eagerly checkpointed first so the anti-join probe and the
-        overwrite read materialized blocks rather than re-running the
-        update plan (which itself reads THIS table). Caller contract:
-        one row per ``_id`` (the frame paths update each in-flight doc
-        at most once per pass)."""
-        rows = checkpoint(
-            rows.select([f.name for f in DOC_SCHEMA.fields]), eager=True
-        )
-        if rows.isEmpty():
+        materialized first (``ckpt.materialize``: one checkpoint job
+        that also counts the rows, so an empty update skips the
+        overwrite with no further job) and the anti-join probe and the
+        overwrite read those blocks rather than re-running the update
+        plan (which itself reads THIS table). Caller contract: one row
+        per ``_id`` (the frame paths update each in-flight doc at most
+        once per pass)."""
+        rows, n = materialize(rows.select([f.name for f in DOC_SCHEMA.fields]))
+        if not n:
             return
         kept = self.frame().join(rows.select("_id"), "_id", "left_anti")
         self.overwrite_frame(kept.unionByName(rows))
@@ -732,12 +732,12 @@ class SlotEventStore:
 
     def append_frame(self, df: DataFrame) -> None:
         """Append (capture_id, events_json) rows; zero-row frames skip
-        the write (same small-files discipline as DocStore)."""
-        out = df.select([f.name for f in SLOT_EVENTS_SCHEMA.fields])
-        out = checkpoint(out, eager=True)
-        if out.isEmpty():
+        the write (same small-files discipline as DocStore), read from
+        the row count of the one ``ckpt.materialize`` job."""
+        out, n = materialize(df.select([f.name for f in SLOT_EVENTS_SCHEMA.fields]))
+        if not n:
             return
-        # one file per bounded spill batch (DocStore.append_frame's
+        # one file per bounded spill batch (DocStore.append_rows's
         # small-files reasoning; prune's rewrite re-compacts anyway)
         out.coalesce(1).write.mode("append").parquet(
             _append_dir(self.path)

@@ -66,6 +66,24 @@ def pinned(_engine_pins):
 
 
 @pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)`` runs ``fn`` under its own Spark job
+    group and returns the number of jobs that group ran."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def events(spark):
     from alerta_spark.sources.lake import load_events
 

@@ -8,7 +8,7 @@ import os
 
 import pytest
 
-from alerta_spark.ckpt import RELIABLE_CONF, checkpoint
+from alerta_spark.ckpt import RELIABLE_CONF, checkpoint, materialize
 from alerta_spark.engine import Engine
 from alerta_spark.rules import load_rules
 
@@ -52,6 +52,48 @@ def test_reliable_requires_checkpoint_dir(spark, monkeypatch):
             checkpoint(spark.range(5))
     finally:
         spark.conf.set(RELIABLE_CONF, "false")
+
+
+@pytest.fixture(params=["local", "reliable"])
+def mode(request, spark):
+    """Run a test once on the localCheckpoint default and once in
+    reliable mode."""
+    if request.param == "reliable":
+        request.getfixturevalue("reliable")
+    return request.param
+
+
+@pytest.mark.parametrize("rows", [0, 37])
+def test_materialize_counts_rows(spark, mode, rows):
+    """``materialize`` returns the checkpointed frame with the row count
+    ``count()`` gives, for a non-empty and an empty post-shuffle frame
+    (the shape of a fired-alerts frame)."""
+    df = spark.range(rows).selectExpr("id % 50 AS k").groupBy("k").count()
+    out, n = materialize(df)
+    assert n == df.count() == rows
+    assert out.count() == rows
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan
+
+
+def test_materialize_runs_no_more_jobs_than_checkpoint(spark, mode, jobs_in_group):
+    """The row count is an observed metric of the checkpoint job itself:
+    ``materialize`` runs no job beyond what ``checkpoint`` of the same
+    frame runs, on a non-empty and on an empty result."""
+
+    def fired(cut):
+        return (
+            spark.range(200).selectExpr("id % 7 AS k").groupBy("k").count()
+            .where(f"k >= {cut}")
+        )
+
+    for cut in (0, 7):
+        plain = jobs_in_group(f"ckpt-{mode}-{cut}", lambda: checkpoint(fired(cut)))
+        counted = jobs_in_group(
+            f"materialize-{mode}-{cut}", lambda: materialize(fired(cut))
+        )
+        assert plain >= 1
+        assert counted <= plain
 
 
 def test_engine_pass_fails_fast_on_misconfigured_reliable_mode(

@@ -1,6 +1,8 @@
 """End-to-end engine run from the YAML rules directory (S6 + the full
 cron-body lifecycle over real testdata)."""
 
+import pytest
+
 from alerta_spark.engine import Engine
 from alerta_spark.rules import load_rules
 
@@ -487,3 +489,179 @@ def test_bench_headline_names_all_exist():
     missing = [n for n in bench.HEADLINE if n not in catalog.QUERIES]
     assert not missing, f"benched but unregistered: {missing}"
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench entries"
+
+
+def _two_thresholds_one_deadman():
+    """Two firing threshold rules and one firing deadman rule."""
+    return [
+        {
+            "alert_name": "big_purchases",
+            "alert_type": "threshold",
+            "criteria": "event_type='purchase' AND CAST(json_extract_scalar(props,'$.k') AS INTEGER) > 50",
+            "aggregation_key": "user_id",
+            "threshold": 2,
+            "summary": "{{metadata.count}} big buys by {{metadata.value}}",
+        },
+        {
+            "alert_name": "errors_by_user",
+            "alert_type": "threshold",
+            "criteria": "event_type='error'",
+            "aggregation_key": "user_id",
+            "threshold": 3,
+        },
+        {
+            "alert_name": "dm_quiet_type",
+            "alert_type": "deadman",
+            "criteria": "event_type='nonexistent_kind'",
+            "aggregation_key": "user_id",
+            "threshold": 0,
+        },
+    ]
+
+
+def test_engine_pass_materializes_each_rule_once(
+    spark, events, tmp_path, monkeypatch
+):
+    """Each threshold or deadman rule's alert documents are built by ONE
+    eager checkpoint, whose observed row count decides the write: the
+    pass calls no ``isEmpty()``."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = {"isEmpty": 0, "checkpoint": 0}
+
+    def spy(name, counter, eager_only):
+        real = getattr(DataFrame, name)
+
+        def wrapped(self, *a, **k):
+            if not eager_only or k.get("eager", a[0] if a else True):
+                calls[counter] += 1
+            return real(self, *a, **k)
+
+        monkeypatch.setattr(DataFrame, name, wrapped)
+
+    spy("isEmpty", "isEmpty", False)
+    spy("checkpoint", "checkpoint", True)
+    spy("localCheckpoint", "checkpoint", True)
+    rules = _two_thresholds_one_deadman()
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, rules)
+    monkeypatch.undo()
+
+    assert calls == {"isEmpty": 0, "checkpoint": len(rules)}
+    assert {d["alert_name"] for d in eng.alerts.docs()} == {
+        r["alert_name"] for r in rules
+    }
+
+
+def test_run_once_logs_documents_per_rule(
+    spark, events, tmp_path, caplog, jobs_in_group
+):
+    """``run_once`` logs one INFO line per threshold or deadman rule with
+    the number of documents it emitted — the count the materializing job
+    already observed, so logging at INFO runs no extra Spark job."""
+    import logging
+
+    rules = _two_thresholds_one_deadman()
+    with caplog.at_level(logging.WARNING, logger="alerta_spark.engine"):
+        quiet = jobs_in_group(
+            "pass-at-warning",
+            lambda: Engine(spark, str(tmp_path / "a")).run_once(events, rules),
+        )
+    caplog.clear()
+    eng = Engine(spark, str(tmp_path / "b"))
+    with caplog.at_level(logging.INFO, logger="alerta_spark.engine"):
+        loud = jobs_in_group("pass-at-info", lambda: eng.run_once(events, rules))
+
+    docs = eng.alerts.docs()
+    expected = sorted(
+        f"rule {r['alert_name']} ({r['alert_type']}): "
+        f"{sum(d['alert_name'] == r['alert_name'] for d in docs)} alerts"
+        for r in rules
+    )
+    logged = sorted(
+        rec.getMessage()
+        for rec in caplog.records
+        if rec.name == "alerta_spark.engine" and rec.levelno == logging.INFO
+        and rec.getMessage().startswith("rule ")
+    )
+    assert logged == expected
+    assert all(not line.endswith(": 0 alerts") for line in logged)
+    assert loud == quiet
+
+
+def test_store_write_error_propagates_for_threshold(
+    spark, events, tmp_path, monkeypatch
+):
+    """A failing alert-store write is not a scan failure: it escapes
+    ``run_once`` instead of being logged away as the rule's error."""
+    from alerta_spark import state
+
+    def unavailable(path):
+        raise OSError("alert store unavailable")
+
+    monkeypatch.setattr(state, "_append_dir", unavailable)
+    eng = Engine(spark, str(tmp_path / "store"))
+    with pytest.raises(OSError, match="alert store unavailable"):
+        eng.run_once(events, _two_thresholds_one_deadman()[:1])
+
+
+def test_store_write_error_propagates_for_deadman(
+    spark, events, tmp_path, monkeypatch
+):
+    """A deadman rule whose store write fails must propagate the error,
+    not read it as absence of evidence and write the fallback alert
+    (the store accepts every write after the first, so a fallback write
+    would land)."""
+    from alerta_spark import state
+
+    real = state._append_dir
+    failed = []
+
+    def fail_once(path):
+        if not failed:
+            failed.append(path)
+            raise OSError("alert store unavailable")
+        return real(path)
+
+    monkeypatch.setattr(state, "_append_dir", fail_once)
+    eng = Engine(spark, str(tmp_path / "store"))
+    with pytest.raises(OSError, match="alert store unavailable"):
+        eng.run_once(events, _two_thresholds_one_deadman()[2:])
+    assert len(failed) == 1
+    assert eng.alerts.docs() == []
+
+
+def test_threshold_assembly_error_is_isolated_to_its_rule(
+    spark, events, tmp_path, monkeypatch, caplog
+):
+    """A runtime error while assembling one threshold rule's alert
+    documents fails that rule inside its swallow (logged with the rule's
+    name); the other rules of the pass still write their alerts."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    from alerta_spark import engine as engine_mod
+
+    real = engine_mod.alert_docs_frame
+
+    def failing_render(fired, id_field="event_id"):
+        docs = real(fired, id_field)
+        return docs.withColumn(
+            "doc",
+            F.when(
+                F.col("alert_name") == "big_purchases",
+                F.raise_error(F.lit("render failed")),
+            ).otherwise(F.col("doc")),
+        )
+
+    monkeypatch.setattr(engine_mod, "alert_docs_frame", failing_render)
+    eng = Engine(spark, str(tmp_path / "store"))
+    with caplog.at_level(logging.ERROR, logger="alerta_spark.engine"):
+        eng.run_once(events, _two_thresholds_one_deadman())
+    assert {d["alert_name"] for d in eng.alerts.docs()} == {
+        "errors_by_user", "dm_quiet_type",
+    }
+    assert [
+        rec.getMessage() for rec in caplog.records if rec.levelno == logging.ERROR
+    ] == ["threshold scan failed for rule 'big_purchases'"]

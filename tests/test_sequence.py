@@ -285,6 +285,101 @@ def test_threshold_and_deadman_stamped_with_eval_time(spark, engine):
     assert {a["utctimestamp"] for a in alerts} == {t.isoformat()}
 
 
+def _deadman_first_rule():
+    """A sequence whose slot 0 is a deadman (started by the per-rule
+    loop) and whose slot 1 is an untemplated threshold (resumed by the
+    per-document path)."""
+    rule = json.loads(json.dumps(SEQ_RULE))
+    rule["alert_name"] = "quiet_then_login"
+    rule["summary"] = "quiet, then a risky login"
+    rule["slots"][0] = {
+        "alert_name": "no_heartbeat",
+        "alert_type": "deadman",
+        "criteria": "source='heartbeat'",
+        "aggregation_key": "details.user_name",
+        "threshold": 0,
+        "summary": "no heartbeat",
+    }
+    rule["slots"][1]["criteria"] = "source='onelogin'"
+    return rule
+
+
+def _threshold_then_deadman_rule():
+    rule = json.loads(json.dumps(SEQ_RULE))
+    rule["slots"][1] = {
+        "alert_name": "then_silence",
+        "alert_type": "deadman",
+        "criteria": "source='onelogin' AND json_extract_scalar(details,'$.user_name')='{{slots.0.events.0.details.user_name}}'",
+        "summary": "user went quiet",
+        "aggregation_key": "details.user_name",
+        "threshold": 0,
+        "event_sample_count": 0,
+    }
+    return rule
+
+
+@pytest.mark.parametrize(
+    "make_rule",
+    [
+        lambda: SEQ_RULE,  # frame-tier starts and resume
+        _threshold_then_deadman_rule,  # frame-tier deadman resume face
+        lambda: _fallback_rule(),  # per-document resume (defined below)
+        _deadman_first_rule,  # per-rule start, per-document resume
+    ],
+    ids=["frames", "frames_deadman", "document", "rule_loop"],
+)
+def test_sequence_slots_stamped_with_eval_time(spark, engine, make_rule):
+    """Each fired slot carries the ``utctimestamp`` of the pass that
+    fired it: slot 0 the first pass's ``eval_time``, slot 1 the
+    second's — not the wall clock."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    t1 = datetime(2025, 6, 1, 12, 0, tzinfo=timezone.utc)
+    t2 = t1 + timedelta(minutes=15)
+    rule = make_rule()
+    engine.run_once(_onelogin_events(spark, [RISKY]), [rule], eval_time=t1)
+    [waiting] = engine.inflight.docs()
+    assert waiting["slots"][0]["utctimestamp"] == t1.isoformat()
+
+    ev2 = _onelogin_events(spark, [RISKY]).withColumn(
+        "event_id", F.col("event_id") + 100
+    )
+    if rule["slots"][1]["alert_type"] == "deadman":
+        ev2 = ev2.limit(0)
+    engine.run_once(ev2, [rule], eval_time=t2)
+    [done] = engine.alerts.docs()
+    assert [s["utctimestamp"] for s in done["slots"]] == [
+        t1.isoformat(), t2.isoformat(),
+    ]
+
+
+def test_batched_resume_stamps_slots_with_now(spark, engine):
+    """The batched resume path stamps the slots it fires with the
+    instant it is given."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    t = datetime(2025, 6, 1, 12, 15, tzinfo=timezone.utc)
+    users = ["u1", "u2"]
+    engine.run_once(
+        _onelogin_events(spark, [dict(RISKY, user_name=u) for u in users]),
+        [SEQ_RULE],
+    )
+    ev2 = _onelogin_events(
+        spark, [dict(RISKY, user_name=u) for u in users]
+    ).withColumn("event_id", F.col("event_id") + 500)
+    pending = []
+    leftover = process_sequence_slot_batched(
+        ev2, engine.inflight.docs(), 1, engine.inflight, engine.alerts,
+        spill_store=engine.slot_events, collect_updates=pending, now=t,
+    )
+    assert leftover == [] and len(pending) == 2
+    assert {d["slots"][1]["utctimestamp"] for d in pending} == {t.isoformat()}
+
+
 def test_compile_templated_criteria_reference_shapes():
     from alerta_spark.operators.sequence import compile_templated_criteria
 

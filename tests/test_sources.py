@@ -57,30 +57,17 @@ def test_nano_timestamp_conversion(spark, nano_lake):
     assert df.select(F.max("ts")).first()[0] == expect
 
 
-def _jobs_in_group(spark, group, fn):
-    """Run ``fn`` under its own Spark job group; return the number of
-    jobs that group ran."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_load_table_runs_no_spark_job(spark):
+def test_load_table_runs_no_spark_job(spark, jobs_in_group):
     """A single-file table's schema comes from its parquet footer, so
     loading it launches no Spark job (schema inference launches one)."""
     from alerta_spark.sources.lake import load_table
 
     path = f"{SF_DIR}/events.parquet"
-    assert _jobs_in_group(
-        spark, "infer-events", lambda: spark.read.parquet(path).schema
+    assert jobs_in_group(
+        "infer-events", lambda: spark.read.parquet(path).schema
     ) >= 1
-    assert _jobs_in_group(
-        spark, "load-events", lambda: load_table(spark, SF_DIR, "events").schema
+    assert jobs_in_group(
+        "load-events", lambda: load_table(spark, SF_DIR, "events").schema
     ) == 0
 
 

@@ -15,12 +15,19 @@ sequence SLOT STATE is the documented driver-side remainder — its
 growth is measured, not hidden).
 
 Usage:  python tools/alert_scale_bench.py [--groups 500,1500,5000]
-            [--label=<name>] [--skip-payload]
+            [--label=<name>] [--skip-payload] [--axes=threshold,sequence]
 Merges results into SCALE_BENCH.json under engine_* keys and prints
 one line per (scale, phase). --label suffixes the result keys with
 '@<name>' so one-off axes (e.g. an extreme-scale probe) coexist with
 the canonical 500/1500/5000 rows instead of replacing them;
 --skip-payload omits the events-per-group payload axis.
+
+--axes=rules measures the RULE-COUNT axis instead of a group axis: one
+threshold pass over 10 and over 40 disjoint rules at 400 fired groups,
+recording wall time and the Spark jobs the pass ran (read from
+``statusTracker`` under the pass's own job group). ``jobs_per_rule`` is
+the slope between the two rule counts — the per-rule job term an
+engine pass pays.
 """
 
 from __future__ import annotations
@@ -38,11 +45,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 REPO = Path(__file__).resolve().parent.parent
 N_RULES = 10
 EVENTS_PER_GROUP = 3
+# rule-count axis (--axes=rules): rule counts at a fixed fired-group count
+RULE_COUNTS = (10, 40)
+RULE_AXIS_GROUPS = 400
 
 
-def _mk_rules(kind: str):
-    """N_RULES DISJOINT rules: rule i serves the users whose bucket is
-    i (bucket = user % N_RULES, stamped into the payload). Disjoint
+def _mk_rules(kind: str, n_rules: int = N_RULES):
+    """``n_rules`` DISJOINT rules: rule i serves the users whose bucket
+    is i (bucket = user % n_rules, stamped into the payload). Disjoint
     criteria keep every rule genuinely firing under the engine's
     intra-pass F8 replay (identical rules would collapse to one — in
     the reference's sequential loop, rule k dedups the events rules
@@ -68,7 +78,7 @@ def _mk_rules(kind: str):
     if kind == "threshold":
         return [
             dict(slot(i), alert_name=f"thr_{i}", summary="hit {{metadata.value}}")
-            for i in range(N_RULES)
+            for i in range(n_rules)
         ]
     if kind == "sequence_deadman":
         # threshold -> DEADMAN sequences: the resume slot is an absence
@@ -196,6 +206,7 @@ def _events(
     id_offset: int,
     epg: int = EVENTS_PER_GROUP,
     payload_bytes: int = 0,
+    buckets: int = N_RULES,
 ):
     """groups x epg onelogin events, one distinct user per group,
     generated DISTRIBUTED (spark.range — no driver list).
@@ -209,7 +220,7 @@ def _events(
             "user_name"
         ),
         F.lit("95").alias("risk_score"),
-        ((F.col("id") % groups) % N_RULES).cast("string").alias("bucket"),
+        ((F.col("id") % groups) % buckets).cast("string").alias("bucket"),
     ]
     if payload_bytes > 0:
         fields.append(F.lit("x" * payload_bytes).alias("blob"))
@@ -250,6 +261,7 @@ def _state_bytes(eng) -> tuple[int, int]:
 
 FAMILIES = (
     "engine_threshold_emission",
+    "engine_threshold_rules",
     "engine_sequence_pass",
     "engine_sequence_payload_axis",
     # round-9/10 axes (opt-in via --axes): the fused deadman resume
@@ -263,6 +275,7 @@ FAMILIES = (
     # owned by tools/streaming_scale_bench.py — listed here so this
     # tool's engine_* prune never deletes the sibling's rows
     "engine_streaming_correlator",
+    "engine_streaming_correlator_composite",
 )
 
 
@@ -298,6 +311,7 @@ def main() -> None:
     )
 
     k_thr = "engine_threshold_emission" + label
+    k_rules = "engine_threshold_rules" + label
     k_seq = "engine_sequence_pass" + label
     k_pay = "engine_sequence_payload_axis" + label
     k_dm = "engine_sequence_pass_deadman" + label
@@ -307,6 +321,7 @@ def main() -> None:
     results: dict[str, dict] = {}
     for ax, key in (
         ("threshold", k_thr),
+        ("rules", k_rules),
         ("sequence", k_seq),
         ("deadman", k_dm),
         ("multivar", k_mv),
@@ -318,6 +333,46 @@ def main() -> None:
     # warm: JVM, parquet writer, python workers
     warm = Engine(spark, tempfile.mkdtemp(prefix="ab_warm_"))
     warm.run_once(_events(spark, 50, 0), _mk_rules("threshold")[:2])
+
+    # --- RULE-COUNT axis: one threshold pass at a fixed fired-group
+    # count over 10 and 40 disjoint rules; the pass's Spark jobs are
+    # counted under its own job group (host-independent), wall time
+    # alongside
+    if "rules" in axes:
+        sc = spark.sparkContext
+        rows = {}
+        for n in RULE_COUNTS:
+            ev = _events(spark, RULE_AXIS_GROUPS, 0, buckets=n).cache()
+            ev.count()
+            eng = Engine(spark, tempfile.mkdtemp(prefix=f"ab_rules_{n}_"))
+            group = f"alert-scale-rules-{n}"
+            sc.setJobGroup(group, group)
+            t0 = time.perf_counter()
+            try:
+                eng.run_once(ev, _mk_rules("threshold", n))
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            dt = round(time.perf_counter() - t0, 3)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            n_alerts = eng.alerts.frame().count()
+            rows[str(n)] = {
+                "sec": dt,
+                "jobs": jobs,
+                "alerts": n_alerts,
+                "driver_rss_mb": _rss_mb(),
+            }
+            print(f"rules={n:<4} threshold  {dt:>8.2f}s jobs={jobs} alerts={n_alerts}")
+            ev.unpersist()
+        lo_n, hi_n = RULE_COUNTS[0], RULE_COUNTS[-1]
+        per_rule = (rows[str(hi_n)]["jobs"] - rows[str(lo_n)]["jobs"]) / (hi_n - lo_n)
+        results[k_rules] = {
+            "groups": RULE_AXIS_GROUPS,
+            "cpus": int(cpus),
+            "rules": rows,
+            "jobs_per_rule": round(per_rule, 2),
+            "jobs_fixed": round(rows[str(lo_n)]["jobs"] - per_rule * lo_n, 2),
+        }
 
     for g in group_scales:
         ev1 = _events(spark, g, 0).cache()
