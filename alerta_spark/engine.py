@@ -17,12 +17,11 @@ import os
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from alerta_spark.ckpt import ReliableCheckpointMisconfigured, materialize
 from alerta_spark.ckpt import validate as ckpt_validate
-from alerta_spark.operators.deadman import deadman_alerts
+from alerta_spark.operators.deadman import absent_alert, deadman_alerts
 from alerta_spark.operators.sequence import (
     process_sequence_alert,
     process_sequence_slot_batched,
@@ -256,21 +255,30 @@ class Engine:
                 # exception is swallowed and leaves events empty, so a
                 # broken criteria / unavailable lake FIRES the deadman
                 # (absence of evidence is the alarm condition)
+                groups = Observation()
                 try:
                     fired = deadman_alerts(
-                        events_df, rule, id_col=self.id_col, ts_col=self.ts_col
+                        events_df, rule, id_col=self.id_col, ts_col=self.ts_col,
+                        groups=groups,
                     )
-                    # scan errors surface HERE, in the one job
+                    # scan errors surface HERE, in the one job, which
+                    # also observes the aggregate's group count
                     docs, n = materialize(alert_docs_frame(fired, self.id_col))
+                    absent = n == 0 and groups.get["groups"] == 0
                 except ReliableCheckpointMisconfigured:
                     raise  # config error — must NOT read as absence
                 except Exception:
-                    empty = events_df.where(F.lit(False))
-                    fired = deadman_alerts(
-                        empty, dict(rule, criteria=""), id_col=self.id_col,
-                        ts_col=self.ts_col,
+                    log.exception(
+                        "deadman scan failed for rule %r; firing its absence alert",
+                        rule.get("alert_name"),
                     )
-                    docs, n = materialize(alert_docs_frame(fired, self.id_col))
+                    absent = True
+                if absent:
+                    # no group at all, or the scan failed: the synthesized
+                    # zero-count alert is one literal row, so its count
+                    # is known and it is written without a job of its own
+                    docs = alert_docs_frame(absent_alert(events_df, rule), self.id_col)
+                    n = 1
             else:
                 continue
             log.info("rule %s (%s): %d alerts", rule.get("alert_name"), kind, n)

@@ -4,9 +4,16 @@ The reference suppresses re-alerting by probing Mongo once per
 candidate event (``remove_previously_alerted`` alerta.py:38-57,
 ``remove_inflight_events`` alerta.py:60-73) — O(N) network round
 trips. The Spark-native design is a single ``left_anti`` equi-join
-against the distinct set of already-alerted event ids; AQE broadcasts
-it at runtime while it is small, without a hard-coded hint (the
-history is unbounded by construction — see remove_previously_alerted).
+against the already-alerted event ids; AQE broadcasts them at runtime
+while they are small, without a hard-coded hint (the history is
+unbounded by construction — see remove_previously_alerted).
+
+A left-anti join needs no distinct build side, so the engine's store
+probe (``state.DocStore.alerted_ids``) is not deduplicated: an id
+captured by several documents repeats, and the planner broadcasts the
+small store scan with no aggregate or shuffle under the join.
+``alerted_event_ids`` below (the catalog's ``f8_dedup_antijoin``)
+still returns distinct ids.
 
 Alerted ids live in two places in an alert document: ``events[]`` and
 ``slots[].events[]`` (sequence alerts) — both are covered, mirroring

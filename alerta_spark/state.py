@@ -631,6 +631,13 @@ class DocStore:
     def alerted_ids(self) -> DataFrame:
         """DataFrame[alerted_event_id] for anti-join dedup (F8/F9).
 
+        An id captured by several documents appears once per document:
+        every caller left-anti-joins against this frame, which needs no
+        distinct build side, so the probe is not deduplicated — a
+        ``distinct`` would put a hash aggregate and a shuffle under the
+        join, where the planner otherwise broadcasts the small store
+        scan directly.
+
         With ``dedup_min_epoch`` set (the engine's ``dedup_history``
         knob), alert FILES written before the bound are excluded
         before the explode, via the ``_metadata.file_modification_
@@ -662,10 +669,8 @@ class DocStore:
         mtimes — old ids then re-enter the probe window until they
         age out again, which only ever errs conservative (extra
         dedup, never a lost one)."""
-        return (
-            self.bounded_frame()
-            .select(F.explode("alerted_event_ids").alias("alerted_event_id"))
-            .distinct()
+        return self.bounded_frame().select(
+            F.explode("alerted_event_ids").alias("alerted_event_id")
         )
 
     def bounded_frame(self) -> DataFrame:

@@ -665,3 +665,124 @@ def test_threshold_assembly_error_is_isolated_to_its_rule(
     assert [
         rec.getMessage() for rec in caplog.records if rec.levelno == logging.ERROR
     ] == ["threshold scan failed for rule 'big_purchases'"]
+
+
+def _parquet_files(path):
+    import os
+
+    return sorted(
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
+def test_threshold_probe_broadcasts_store_without_shuffle(spark, events, tmp_path):
+    """The F8 probe of a non-empty alert store is the bare exploded
+    store scan: the planner broadcasts it under the left-anti join, with
+    no distinct aggregate and so no shuffle on ``alerted_event_id``."""
+    from alerta_spark.operators.threshold import threshold_alerts
+
+    big, errors, _ = _two_thresholds_one_deadman()
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, [big])
+    assert eng.alerts.docs()
+    fired = threshold_alerts(events, errors, alerted_ids=eng.alerts.alerted_ids())
+    assert fired.collect()
+    plan = fired._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
+    assert "Exchange hashpartitioning(alerted_event_id" not in plan
+
+
+def test_deadman_only_pass_jobs(spark, events, tmp_path, jobs_in_group):
+    """A deadman rule reads "no group at all" from the group count its
+    materializing job observes: a pass whose criteria match nothing runs
+    that job and the write of the synthesized alert, with no second scan
+    of the events, and a criteria the optimizer folds to false runs the
+    write alone."""
+    dm = _two_thresholds_one_deadman()[2]
+    for name, rule, expected in (
+        ("no-match", dm, 2),
+        ("false", dict(dm, criteria="1 = 0"), 1),
+    ):
+        eng = Engine(spark, str(tmp_path / name))
+        jobs = jobs_in_group(f"deadman-only-{name}", lambda: eng.run_once(events, [rule]))
+        assert jobs == expected, name
+        assert len(eng.alerts.docs()) == 1
+
+
+@pytest.mark.parametrize("criteria", ["event_type='nonexistent_kind'", "1 = 0"])
+def test_deadman_absence_alert_through_run_once(spark, events, tmp_path, criteria):
+    """No group at all fires exactly one synthesized alert: count 0,
+    the aggregation key as the value, and no events."""
+    dm = dict(_two_thresholds_one_deadman()[2], criteria=criteria)
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, [dm])
+    [doc] = eng.alerts.docs()
+    assert doc["alert_name"] == dm["alert_name"]
+    assert doc["metadata"] == {"value": dm["aggregation_key"], "count": 0}
+    assert doc["events"] == []
+
+
+def test_deadman_groups_above_threshold_write_nothing(spark, events, tmp_path):
+    """Groups exist and all exceed the threshold: no alert, and the pass
+    adds no part file to the alert store."""
+    dm = dict(_two_thresholds_one_deadman()[2], criteria="event_type='purchase'")
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, [_two_thresholds_one_deadman()[0]])
+    before = _parquet_files(eng.alerts.path)
+    eng.run_once(events, [dm])
+    assert _parquet_files(eng.alerts.path) == before
+    assert {d["alert_name"] for d in eng.alerts.docs()} == {"big_purchases"}
+
+
+def test_deadman_mixed_groups_fire_only_at_or_below_threshold(spark, events, tmp_path):
+    """Only the groups whose count is at or below the threshold fire;
+    with groups present there is no synthesized row."""
+    counts = {
+        str(r["user_id"]): r["count"]
+        for r in events.where("event_type='purchase' AND user_id IS NOT NULL")
+        .groupBy("user_id")
+        .count()
+        .collect()
+    }
+    threshold = sorted(counts.values())[len(counts) // 2]
+    expected = {(k, c) for k, c in counts.items() if c <= threshold}
+    assert 0 < len(expected) < len(counts)
+    dm = dict(
+        _two_thresholds_one_deadman()[2],
+        criteria="event_type='purchase'",
+        threshold=threshold,
+    )
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, [dm])
+    docs = eng.alerts.docs()
+    assert {(d["metadata"]["value"], d["metadata"]["count"]) for d in docs} == expected
+    assert len(docs) == len(expected)
+    assert all(d["events"] for d in docs)
+
+
+def test_f8_removes_ids_repeated_across_stored_alerts(spark, events, tmp_path):
+    """An event id captured by two stored documents (a deadman alert and
+    a threshold alert) appears twice in the store probe and is still
+    removed by the next pass's anti-join."""
+    errors = _two_thresholds_one_deadman()[1]
+    dm_errors = {
+        "alert_name": "few_errors",
+        "alert_type": "deadman",
+        "criteria": "event_type='error'",
+        "aggregation_key": "user_id",
+        "threshold": 1000,
+    }
+    eng = Engine(spark, str(tmp_path / "store"))
+    eng.run_once(events, [errors, dm_errors])
+    ids = [r["alerted_event_id"] for r in eng.alerts.alerted_ids().collect()]
+    repeated = {i for i in ids if ids.count(i) > 1}
+    assert repeated
+    names = {d["alert_name"] for d in eng.alerts.docs()}
+    assert names == {"errors_by_user", "few_errors"}
+
+    eng.run_once(events, [dict(errors, alert_name="errors_again", threshold=1)])
+    assert {d["alert_name"] for d in eng.alerts.docs()} == names

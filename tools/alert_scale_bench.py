@@ -23,11 +23,11 @@ the canonical 500/1500/5000 rows instead of replacing them;
 --skip-payload omits the events-per-group payload axis.
 
 --axes=rules measures the RULE-COUNT axis instead of a group axis: one
-threshold pass over 10 and over 40 disjoint rules at 400 fired groups,
-recording wall time and the Spark jobs the pass ran (read from
-``statusTracker`` under the pass's own job group). ``jobs_per_rule`` is
-the slope between the two rule counts — the per-rule job term an
-engine pass pays.
+threshold pass, and one deadman pass, over 10 and over 40 disjoint
+rules at 400 fired groups, recording wall time and the Spark jobs the
+pass ran (read from ``statusTracker`` under the pass's own job group).
+``jobs_per_rule`` is the slope between the two rule counts — the
+per-rule job term an engine pass pays.
 """
 
 from __future__ import annotations
@@ -78,6 +78,20 @@ def _mk_rules(kind: str, n_rules: int = N_RULES):
     if kind == "threshold":
         return [
             dict(slot(i), alert_name=f"thr_{i}", summary="hit {{metadata.value}}")
+            for i in range(n_rules)
+        ]
+    if kind == "deadman":
+        # deadman twins of the threshold rules: every user sends
+        # EVENTS_PER_GROUP events, so `count <= EVENTS_PER_GROUP` fires
+        # every group and the alert count matches the threshold axis
+        return [
+            dict(
+                slot(i),
+                alert_name=f"dm_{i}",
+                alert_type="deadman",
+                threshold=EVENTS_PER_GROUP,
+                summary="quiet {{metadata.value}}",
+            )
             for i in range(n_rules)
         ]
     if kind == "sequence_deadman":
@@ -262,6 +276,7 @@ def _state_bytes(eng) -> tuple[int, int]:
 FAMILIES = (
     "engine_threshold_emission",
     "engine_threshold_rules",
+    "engine_deadman_rules",
     "engine_sequence_pass",
     "engine_sequence_payload_axis",
     # round-9/10 axes (opt-in via --axes): the fused deadman resume
@@ -277,6 +292,47 @@ FAMILIES = (
     "engine_streaming_correlator",
     "engine_streaming_correlator_composite",
 )
+
+
+def _rule_axis(spark, kind: str, cpus: int) -> dict:
+    """One ``kind`` pass over each of RULE_COUNTS disjoint rules at
+    RULE_AXIS_GROUPS fired groups: wall time and the pass's Spark jobs."""
+    from alerta_spark.engine import Engine
+
+    sc = spark.sparkContext
+    rows = {}
+    for n in RULE_COUNTS:
+        ev = _events(spark, RULE_AXIS_GROUPS, 0, buckets=n).cache()
+        ev.count()
+        eng = Engine(spark, tempfile.mkdtemp(prefix=f"ab_rules_{kind}_{n}_"))
+        group = f"alert-scale-rules-{kind}-{n}"
+        sc.setJobGroup(group, group)
+        t0 = time.perf_counter()
+        try:
+            eng.run_once(ev, _mk_rules(kind, n))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        dt = round(time.perf_counter() - t0, 3)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        n_alerts = eng.alerts.frame().count()
+        rows[str(n)] = {
+            "sec": dt,
+            "jobs": jobs,
+            "alerts": n_alerts,
+            "driver_rss_mb": _rss_mb(),
+        }
+        print(f"rules={n:<4} {kind:<10} {dt:>8.2f}s jobs={jobs} alerts={n_alerts}")
+        ev.unpersist()
+    lo_n, hi_n = RULE_COUNTS[0], RULE_COUNTS[-1]
+    per_rule = (rows[str(hi_n)]["jobs"] - rows[str(lo_n)]["jobs"]) / (hi_n - lo_n)
+    return {
+        "groups": RULE_AXIS_GROUPS,
+        "cpus": cpus,
+        "rules": rows,
+        "jobs_per_rule": round(per_rule, 2),
+        "jobs_fixed": round(rows[str(lo_n)]["jobs"] - per_rule * lo_n, 2),
+    }
 
 
 def main() -> None:
@@ -311,7 +367,9 @@ def main() -> None:
     )
 
     k_thr = "engine_threshold_emission" + label
-    k_rules = "engine_threshold_rules" + label
+    k_rules = {
+        kind: f"engine_{kind}_rules{label}" for kind in ("threshold", "deadman")
+    }
     k_seq = "engine_sequence_pass" + label
     k_pay = "engine_sequence_payload_axis" + label
     k_dm = "engine_sequence_pass_deadman" + label
@@ -321,7 +379,6 @@ def main() -> None:
     results: dict[str, dict] = {}
     for ax, key in (
         ("threshold", k_thr),
-        ("rules", k_rules),
         ("sequence", k_seq),
         ("deadman", k_dm),
         ("multivar", k_mv),
@@ -334,45 +391,13 @@ def main() -> None:
     warm = Engine(spark, tempfile.mkdtemp(prefix="ab_warm_"))
     warm.run_once(_events(spark, 50, 0), _mk_rules("threshold")[:2])
 
-    # --- RULE-COUNT axis: one threshold pass at a fixed fired-group
-    # count over 10 and 40 disjoint rules; the pass's Spark jobs are
-    # counted under its own job group (host-independent), wall time
-    # alongside
+    # --- RULE-COUNT axis: one threshold pass and one deadman pass at a
+    # fixed fired-group count over 10 and 40 disjoint rules; the pass's
+    # Spark jobs are counted under its own job group (host-independent),
+    # wall time alongside
     if "rules" in axes:
-        sc = spark.sparkContext
-        rows = {}
-        for n in RULE_COUNTS:
-            ev = _events(spark, RULE_AXIS_GROUPS, 0, buckets=n).cache()
-            ev.count()
-            eng = Engine(spark, tempfile.mkdtemp(prefix=f"ab_rules_{n}_"))
-            group = f"alert-scale-rules-{n}"
-            sc.setJobGroup(group, group)
-            t0 = time.perf_counter()
-            try:
-                eng.run_once(ev, _mk_rules("threshold", n))
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-                sc.setLocalProperty("spark.job.description", None)
-            dt = round(time.perf_counter() - t0, 3)
-            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            n_alerts = eng.alerts.frame().count()
-            rows[str(n)] = {
-                "sec": dt,
-                "jobs": jobs,
-                "alerts": n_alerts,
-                "driver_rss_mb": _rss_mb(),
-            }
-            print(f"rules={n:<4} threshold  {dt:>8.2f}s jobs={jobs} alerts={n_alerts}")
-            ev.unpersist()
-        lo_n, hi_n = RULE_COUNTS[0], RULE_COUNTS[-1]
-        per_rule = (rows[str(hi_n)]["jobs"] - rows[str(lo_n)]["jobs"]) / (hi_n - lo_n)
-        results[k_rules] = {
-            "groups": RULE_AXIS_GROUPS,
-            "cpus": int(cpus),
-            "rules": rows,
-            "jobs_per_rule": round(per_rule, 2),
-            "jobs_fixed": round(rows[str(lo_n)]["jobs"] - per_rule * lo_n, 2),
-        }
+        for kind, key in k_rules.items():
+            results[key] = _rule_axis(spark, kind, int(cpus))
 
     for g in group_scales:
         ev1 = _events(spark, g, 0).cache()
@@ -548,8 +573,8 @@ def main() -> None:
                 hist_times[f"sec_{tag}"] = round(time.perf_counter() - t0, 3)
                 # the bare F8 probe, isolated from the pass's fixed
                 # overhead (the signal the full-pass timing buries in
-                # host noise at local scale): explode + distinct +
-                # anti-join, warm
+                # host noise at local scale): explode + anti-join,
+                # warm
                 from alerta_spark.operators.dedup import (
                     remove_previously_alerted,
                 )
